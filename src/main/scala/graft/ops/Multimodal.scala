@@ -26,13 +26,27 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  // ImageIO defaults to disk-backed stream caches: every encode/decode
-  // spills through a temp FILE in java.io.tmpdir. All payloads here are
-  // in-memory byte arrays (and real pipelines feed decoded blobs from
-  // column batches the same way), so the disk round-trip is pure
-  // overhead on every PNG/WAV/AVI encode + decode (MJPEG pays it per
-  // frame). Memory-cached streams produce byte-identical codec output.
-  javax.imageio.ImageIO.setUseCache(false)
+  // ImageIO's stream factories spill every encode/decode through a temp
+  // FILE in java.io.tmpdir unless the JVM-global ImageIO.setUseCache(false)
+  // is set. Payloads here are in-memory byte arrays (MJPEG pays the disk
+  // round-trip per frame), so the codec helpers hand ImageIO the
+  // memory-cached streams that switch would select: the same bytes, on
+  // any JVM the code runs on, with no global state changed for other
+  // ImageIO users.
+  private def writeImage(
+      img: java.awt.image.RenderedImage, format: String): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    try javax.imageio.ImageIO.write(img, format, out)
+    finally out.close() // flushes into bos
+    bos.toByteArray
+  }
+
+  private def readImage(payload: Array[Byte], offset: Int,
+      length: Int): java.awt.image.BufferedImage =
+    javax.imageio.ImageIO.read(
+      new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(payload, offset, length)))
 
   /** Typed metadata carried beside the binary payload. */
   val mediaSchema: StructType = StructType(Seq(
@@ -59,9 +73,7 @@ object Multimodal {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    writeImage(img, "png")
   }
 
   /** A real 16-bit mono PCM WAV (RIFF/WAVE via `AudioSystem.write`) of a
@@ -124,9 +136,7 @@ object Multimodal {
         }
         y += 1
       }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", bos)
-      bos.toByteArray
+      writeImage(img, "jpg")
     }
 
     def chunk(id: String, body: Array[Byte]): Array[Byte] = {
@@ -254,8 +264,7 @@ object Multimodal {
     */
   def decodeImage(payload: Array[Byte], featureDim: Int): Array[Float] = {
     require(featureDim >= 3, s"featureDim $featureDim < 3")
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(payload))
+    val img = readImage(payload, 0, payload.length)
     require(img != null, "image payload is not decodable")
     val w = img.getWidth
     val h = img.getHeight
@@ -404,8 +413,7 @@ object Multimodal {
     var f = 0
     while (f < frameSpans.length) {
       val (o, len) = frameSpans(f)
-      val img = javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(payload, o, len))
+      val img = readImage(payload, o, len)
       require(img != null, s"frame $f is not a decodable JPEG")
       var lum = 0.0
       var y = 0

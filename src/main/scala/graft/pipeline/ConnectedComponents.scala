@@ -63,7 +63,13 @@ object ConnectedComponents {
   private def recordedToken(io: graft.io.TableIO, stage: String): String =
     io.metadataOf(stage, "lineage").getOrElse("")
 
-  /** edges(src, dst) + vertices(file_id) -> (file_id, cluster_id). */
+  /** edges(src, dst) + vertices(file_id) -> (file_id, cluster_id).
+    *
+    * Endpoints ⊆ vertices: the output labels exactly the ids in
+    * `vertices`. An edge endpoint missing from `vertices` gets no label
+    * and carries no label between components; both loops drop it the
+    * same way.
+    */
   def run(
       spark: SparkSession,
       vertices: DataFrame,
@@ -212,6 +218,8 @@ object ConnectedComponents {
         .groupBy("file_id")
         .agg(min("cid").as("cand_cid"),
           max(when(col("is_self"), col("cid"))).as("old_cid"))
+        // no self row: an endpoint missing from `vertices` (see run)
+        .where(col("old_cid").isNotNull)
 
       // 2. pointer jumping: take the label of my label's vertex.
       // Parents side carries ONLY non-root vertices (cand_cid < file_id):
@@ -285,16 +293,22 @@ object ConnectedComponents {
       durable: Option[(graft.io.TableIO, Int)],
       lineageToken: String): (DataFrame, Int) = {
     import spark.implicits._
-    val sl = StorageLevel.MEMORY_AND_DISK
     val biRdd = biEdges.as[(Long, Long)].rdd
     val p = new HashPartitioner(math.max(1, biRdd.getNumPartitions))
+    // everything this loop persists; all but the RDD the returned labels
+    // read (`result`) is unpersisted before returning
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
+    def persist[T](rdd: RDD[T]): RDD[T] = {
+      persisted += rdd
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    }
     def keyed(df: DataFrame): RDD[(Long, Long)] =
-      df.as[(Long, Long)].rdd.partitionBy(p).persist(sl)
+      persist(df.as[(Long, Long)].rdd.partitionBy(p))
 
-    val edges = biRdd.partitionBy(p).persist(sl)
-    var labels = vertices
-      .select(col("file_id"), col("file_id").as("cluster_id"))
-      .as[(Long, Long)].rdd.partitionBy(p).persist(sl)
+    val edges = persist(biRdd.partitionBy(p))
+    var labels = keyed(
+      vertices.select(col("file_id"), col("file_id").as("cluster_id")))
+    var result: RDD[_] = labels
     var frontier = labels
     var iter = 0
 
@@ -302,6 +316,7 @@ object ConnectedComponents {
       case (io, i) =>
         val snap = io.read(snapshotStage(i))
         labels = keyed(snap.select("file_id", "cluster_id"))
+        result = labels
         frontier = keyed(snap.where(col("in_frontier"))
           .select("file_id", "cluster_id"))
         iter = i
@@ -335,10 +350,11 @@ object ConnectedComponents {
           (id, (nl, nl != old))
         }
         .partitionBy(p)
-        .persist(sl)
+      persist(next)
       next.count() // ONE materialization per round
       done = acc.value == 0L
       labels = next.mapValues(_._1)
+      result = next
       frontier = next.filter(_._2._2).mapValues(_._1)
       if (prev != null) prev.unpersist(false)
       prev = next
@@ -352,6 +368,7 @@ object ConnectedComponents {
               .toDF("file_id", "cluster_id", "in_frontier")
           }
           labels = keyed(snap.select("file_id", "cluster_id"))
+          result = labels
           frontier = keyed(snap.where(col("in_frontier"))
             .select("file_id", "cluster_id"))
           dropSupersededSnapshots(io, iter)
@@ -361,6 +378,7 @@ object ConnectedComponents {
     if (done) durable.foreach { case (io, _) =>
       dropAllSnapshots(io, maxIterations)
     }
+    persisted.foreach(r => if (r ne result) r.unpersist(false))
     (labels.toDF("file_id", "cluster_id"), iter)
   }
 }

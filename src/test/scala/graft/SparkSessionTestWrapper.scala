@@ -2,19 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local session for ScalaTest suites (lazily created once per JVM). */
+/** Shared local session for ScalaTest suites (lazily created once per JVM),
+  * built with the same settings as every benchmark and tool session.
+  */
 object SparkSessionTestWrapper {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = Bench.buildSession("4")
 }

@@ -681,6 +681,18 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
+  test("image and video codecs leave ImageIO's JVM-global cache switch alone") {
+    val saved = javax.imageio.ImageIO.getUseCache
+    javax.imageio.ImageIO.setUseCache(true)
+    try {
+      val rnd = new scala.util.Random(5L)
+      Multimodal.decodeImage(Multimodal.syntheticPng(rnd, 16, 12), 8)
+      Multimodal.decodeVideo(
+        Multimodal.syntheticAviMjpeg(rnd, 16, 12, nFrames = 3, fps = 4), 8)
+      assert(javax.imageio.ImageIO.getUseCache)
+    } finally javax.imageio.ImageIO.setUseCache(saved)
+  }
+
   test("audio payloads are real PCM WAVs; decode recovers samples + spectrum") {
     import spark.implicits._
     // scalar: the generated payload is an actual RIFF/WAVE stream and

@@ -176,6 +176,42 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("edge endpoints missing from vertices are dropped the same way by both loops") {
+    import spark.implicits._
+    // 9 is not a vertex: it bridges {0,1} and {2,3} only through itself
+    val vdf = Seq(0L, 1L, 2L, 3L, 4L).toDF("file_id")
+    val edf = Seq((0L, 1L), (1L, 9L), (9L, 2L), (2L, 3L)).toDF("src", "dst")
+    def labels(smallGraphMaxEdges: Long): Map[Long, Long] =
+      ConnectedComponents.run(spark, vdf, edf,
+        smallGraphMaxEdges = smallGraphMaxEdges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val expected = Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L, 4L -> 4L)
+    assert(labels(0L) === expected)
+    assert(labels(ConnectedComponents.SmallGraphMaxEdges) === expected)
+  }
+
+  test("small-graph loop leaves only its result persisted") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val vertices = (0L until 512L).toDF("file_id")
+    val edges = (0L until 511L).map(i => (i, i + 1)).toDF("src", "dst")
+    val io = new graft.io.TableIO(spark,
+      java.nio.file.Files.createTempDirectory("graft-cc-persist").toString)
+    // a killed run and its resume: initial labels, edges, every round and
+    // the keyed snapshot copies of both runs are persisted along the way
+    val runs = Seq(4, 50).map { maxIterations =>
+      val before = sc.getPersistentRDDs.keySet
+      val (labels, _) = ConnectedComponents.runCounted(spark, vertices,
+        edges, maxIterations = maxIterations, durable = Some((io, 2)))
+      val left = sc.getPersistentRDDs.keySet.diff(before)
+      (labels.collect().map(_.getLong(1)).toSet, left.size)
+    }
+    assert(runs.last._1 === Set(0L))
+    // the edge table's localCheckpoint (taken before the loop) + the
+    // result the returned labels read
+    runs.foreach { case (_, left) => assert(left <= 2, s"$left RDDs left") }
+  }
+
   test("pointer jumping converges in O(log diameter) rounds") {
     import spark.implicits._
     // 512-vertex path: plain propagation would need ~512 rounds

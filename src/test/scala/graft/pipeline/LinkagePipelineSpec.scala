@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -171,6 +172,28 @@ class LinkagePipelineSpec extends AnyFunSuite {
     val lazyPath = Tokenizer.pruneCommon(tokens)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     assert(withCount == lazyPath)
+  }
+
+  test("a repeat run on the same input compiles no new classes") {
+    // a run compiles ~90 classes; in Spark's default 100-entry codegen
+    // cache the LRU order evicts part of them before the repeat run uses
+    // them again. The session sizes the cache so a repeat run reuses every
+    // class instead of compiling and JIT-warming it again
+    val files = RepoFiles.generate(spark, nFiles = 2000, seed = 11L)
+    def run(): (Seq[(Long, Long)], Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val clusters = new LinkagePipeline(spark, new TableIO(spark,
+        tmpDir("graft-codegen"))).run(files)
+        .select("file_id", "cluster_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      (clusters, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    val (first, compiledFirst) = run()
+    val (second, compiledSecond) = run()
+    info(s"classes compiled: first run $compiledFirst, second run $compiledSecond")
+    assert(second == first)
+    assert(compiledSecond == 0,
+      s"repeat run compiled $compiledSecond classes (first run: $compiledFirst)")
   }
 
   test("resume: second run reuses committed checkpoints") {
