@@ -37,18 +37,19 @@ final class TableIO(spark: SparkSession, root: String) {
     * unpartitioned stages), so [[read]] skips the per-read footer
     * schema-inference pass — the catalog role Iceberg metadata plays.
     * Base64-wrapped because raw schema JSON carries every character the
-    * manifest format forbids.
+    * manifest format forbids. Partitioned stages record an empty
+    * `schema_b64`, which means "no committed schema": [[read]] infers.
     */
   private def committedSchema(stage: String): Option[org.apache.spark.sql.types.StructType] =
     manifest(stage).flatMap { m =>
       "\"schema_b64\":\"([A-Za-z0-9+/=]*)\"".r.findFirstMatchIn(m)
         .map(_.group(1))
-    }.flatMap { b64 =>
+    }.filter(_.nonEmpty).flatMap { b64 =>
       try Some(org.apache.spark.sql.types.DataType
         .fromJson(new String(
           java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8))
         .asInstanceOf[org.apache.spark.sql.types.StructType])
-      catch { case _: Exception => None } // fall back to inference
+      catch { case _: Exception => None } // corrupt manifest: infer
     }
 
   def read(stage: String): DataFrame =

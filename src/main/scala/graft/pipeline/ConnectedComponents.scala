@@ -1,10 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Transitive closure via min-label propagation with pointer jumping.
   *
@@ -20,24 +17,8 @@ import org.apache.spark.storage.StorageLevel
   * converges in O(log diameter) — the property that matters when
   * sorted-neighborhood chains make long thin components at 10^12 rows.
   *
-  * TWO physical executions of the SAME algorithm, chosen by measured edge
-  * count (the strategy-by-size pattern broadcast joins use):
-  *   - large graphs run the DataFrame loop: UnsafeRow shuffles, codegen,
-  *     AQE frontier broadcasts — the 100-TB shape. Each round
-  *     localCheckpoints to cut lineage so plans don't grow.
-  *   - small graphs (<= `smallGraphMaxEdges` undirected edges, e.g. the
-  *     tail subgraphs an incremental pipeline closes per batch) run the
-  *     identical candidate/jump/changed rules as an RDD loop over a fixed
-  *     HashPartitioner: the edge table is co-partitioned ONCE, every
-  *     round is one job with zero Catalyst re-planning/codegen, and
-  *     convergence is detected by an accumulator (over-count under task
-  *     retry can only inflate a NONZERO count — a zero count has nothing
-  *     to double-count — so the zero test that stops the loop is exact).
-  *     Measured on this repo's fixtures: ~2x less fixed overhead per
-  *     round at 4k-80k edges, while at 800k edges the boxed-tuple
-  *     shuffles lose to the DataFrame loop — hence the size gate.
-  *     RDD-loop parity with the DataFrame loop is spec-pinned
-  *     (ConnectedComponentsSpec "small- and large-graph loops agree").
+  * Each round localCheckpoints its labels to cut lineage, so the plan
+  * stays the same size however many rounds run.
   *
   * Restart story, two tiers: by default a driver restart resumes from the
   * last pipeline-stage checkpoint (TableIO) and replays the whole loop —
@@ -46,14 +27,9 @@ import org.apache.spark.storage.StorageLevel
   * (labels + frontier) snapshot through TableIO every k rounds and resumes
   * the LOOP from the newest committed snapshot, making the 10^12-row run
   * restartable mid-closure; completed runs clean their snapshots up.
-  * Snapshots are representation-independent (a parquet stage of
-  * (file_id, cluster_id, in_frontier)), so either loop resumes a snapshot
-  * the other wrote.
+  * A snapshot is a parquet stage of (file_id, cluster_id, in_frontier).
   */
 object ConnectedComponents {
-
-  /** Default edge-count gate for the low-overhead small-graph loop. */
-  val SmallGraphMaxEdges: Long = 100000L
 
   private def snapshotStage(i: Int): String = s"cc_round_$i"
 
@@ -63,81 +39,8 @@ object ConnectedComponents {
   private def recordedToken(io: graft.io.TableIO, stage: String): String =
     io.metadataOf(stage, "lineage").getOrElse("")
 
-  /** edges(src, dst) + vertices(file_id) -> (file_id, cluster_id).
-    *
-    * Endpoints ⊆ vertices: the output labels exactly the ids in
-    * `vertices`. An edge endpoint missing from `vertices` gets no label
-    * and carries no label between components; both loops drop it the
-    * same way.
-    */
-  def run(
-      spark: SparkSession,
-      vertices: DataFrame,
-      edges: DataFrame,
-      maxIterations: Int = 50,
-      durable: Option[(graft.io.TableIO, Int)] = None,
-      lineageToken: String = "",
-      canonicalEdges: Boolean = false,
-      smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame =
-    runCounted(spark, vertices, edges, maxIterations, durable,
-      lineageToken, canonicalEdges, smallGraphMaxEdges)._1
-
-  /** [[run]] plus the number of rounds executed — lets tests pin the
-    * O(log diameter) convergence property of pointer jumping.
-    *
-    * @param durable optional (TableIO, k): commit a durable loop snapshot
-    *   every k rounds and resume from the newest committed one.
-    * @param lineageToken fingerprint of the INPUT graph (e.g. the edges
-    *   stage manifest's opaque `commit_token`). Snapshots are stamped with it;
-    *   a snapshot whose stamp differs from the current token was computed
-    *   against a different graph (upstream recomputed, or a shared TableIO
-    *   root reused with new data) and is discarded instead of resumed —
-    *   resuming it would silently restore labels from the old graph.
-    * @param canonicalEdges the caller guarantees `edges` is already
-    *   DISTINCT with src < dst (both internal producers — Scoring.edges
-    *   and the banded minhash pairs — are). The two orientations of a
-    *   distinct canonical set are disjoint and each distinct, so the
-    *   undirected edge table needs no dedup shuffle; min-label
-    *   propagation is additionally idempotent under duplicate edges, so
-    *   this flag can never change the result, only drop an exchange.
-    * @param smallGraphMaxEdges undirected-edge-count gate below which the
-    *   fixed-partitioner RDD loop runs (0 forces the DataFrame loop —
-    *   how the parity spec pins both paths).
-    */
-  def runCounted(
-      spark: SparkSession,
-      vertices: DataFrame,
-      edges: DataFrame,
-      maxIterations: Int = 50,
-      durable: Option[(graft.io.TableIO, Int)] = None,
-      lineageToken: String = "",
-      canonicalEdges: Boolean = false,
-      smallGraphMaxEdges: Long = SmallGraphMaxEdges): (DataFrame, Int) = {
-    // undirected: both orientations, deduped (unless provably canonical)
-    val bi0 = edges
-      .select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val biEdges = (if (canonicalEdges) bi0 else bi0.dropDuplicates("src", "dst"))
-      .localCheckpoint()
-
-    // strategy by measured size (blocks are materialized — this count is
-    // a cheap cache scan, not a recompute); the RDD loop needs 64-bit ids
-    val longIds =
-      vertices.schema.fields.exists(f =>
-        f.name == "file_id" &&
-          f.dataType == org.apache.spark.sql.types.LongType) &&
-        biEdges.schema.fields.forall(
-          _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && biEdges.count() <= smallGraphMaxEdges)
-      runSmallGraph(spark, vertices, biEdges, maxIterations, durable,
-        lineageToken)
-    else
-      runLargeGraph(spark, vertices, biEdges, maxIterations, durable,
-        lineageToken)
-  }
-
-  /** The resume decision shared by both loops: newest committed snapshot
-    * with a matching lineage stamp, else invalidate all snapshots.
+  /** The resume decision: newest committed snapshot with a matching
+    * lineage stamp, else invalidate all snapshots.
     */
   private def resumableSnapshot(
       durable: Option[(graft.io.TableIO, Int)],
@@ -163,16 +66,57 @@ object ConnectedComponents {
     (1 to maxIterations).foreach(i =>
       if (io.isCommitted(snapshotStage(i))) io.invalidate(snapshotStage(i)))
 
-  /** DataFrame loop — UnsafeRow shuffles + AQE broadcasts, the shape for
-    * graphs whose frontier/edge volumes need codegen and spill.
+  /** edges(src, dst) + vertices(file_id) -> (file_id, cluster_id).
+    *
+    * Endpoints ⊆ vertices: the output labels exactly the ids in
+    * `vertices`. An edge endpoint missing from `vertices` gets no label
+    * and carries no label between components.
     */
-  private def runLargeGraph(
+  def run(
       spark: SparkSession,
       vertices: DataFrame,
-      biEdges: DataFrame,
-      maxIterations: Int,
-      durable: Option[(graft.io.TableIO, Int)],
-      lineageToken: String): (DataFrame, Int) = {
+      edges: DataFrame,
+      maxIterations: Int = 50,
+      durable: Option[(graft.io.TableIO, Int)] = None,
+      lineageToken: String = "",
+      canonicalEdges: Boolean = false): DataFrame =
+    runCounted(spark, vertices, edges, maxIterations, durable,
+      lineageToken, canonicalEdges)._1
+
+  /** [[run]] plus the number of rounds executed — lets tests pin the
+    * O(log diameter) convergence property of pointer jumping.
+    *
+    * @param durable optional (TableIO, k): commit a durable loop snapshot
+    *   every k rounds and resume from the newest committed one.
+    * @param lineageToken fingerprint of the INPUT graph (e.g. the edges
+    *   stage manifest's opaque `commit_token`). Snapshots are stamped with it;
+    *   a snapshot whose stamp differs from the current token was computed
+    *   against a different graph (upstream recomputed, or a shared TableIO
+    *   root reused with new data) and is discarded instead of resumed —
+    *   resuming it would silently restore labels from the old graph.
+    * @param canonicalEdges the caller guarantees `edges` is already
+    *   DISTINCT with src < dst (both internal producers — Scoring.edges
+    *   and the banded minhash pairs — are). The two orientations of a
+    *   distinct canonical set are disjoint and each distinct, so the
+    *   undirected edge table needs no dedup shuffle; min-label
+    *   propagation is additionally idempotent under duplicate edges, so
+    *   this flag can never change the result, only drop an exchange.
+    */
+  def runCounted(
+      spark: SparkSession,
+      vertices: DataFrame,
+      edges: DataFrame,
+      maxIterations: Int = 50,
+      durable: Option[(graft.io.TableIO, Int)] = None,
+      lineageToken: String = "",
+      canonicalEdges: Boolean = false): (DataFrame, Int) = {
+    // undirected: both orientations, deduped (unless provably canonical)
+    val bi0 = edges
+      .select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val biEdges = (if (canonicalEdges) bi0 else bi0.dropDuplicates("src", "dst"))
+      .localCheckpoint()
+
     var labels = vertices
       .select(col("file_id"), col("file_id").as("cluster_id"))
       .localCheckpoint()
@@ -276,109 +220,5 @@ object ConnectedComponents {
       dropAllSnapshots(io, maxIterations)
     }
     (labels, iter)
-  }
-
-  /** Fixed-partitioner RDD loop — the identical candidate/jump/changed
-    * rules with none of the per-round planning/codegen/AQE-stage cost:
-    * edges are co-partitioned once, each round is ONE job (edges x
-    * frontier narrow join -> message reduceByKey -> narrow label merge ->
-    * jump join -> repartition-by-id), and the changed count rides a
-    * LongAccumulator in the materializing action.
-    */
-  private def runSmallGraph(
-      spark: SparkSession,
-      vertices: DataFrame,
-      biEdges: DataFrame,
-      maxIterations: Int,
-      durable: Option[(graft.io.TableIO, Int)],
-      lineageToken: String): (DataFrame, Int) = {
-    import spark.implicits._
-    val biRdd = biEdges.as[(Long, Long)].rdd
-    val p = new HashPartitioner(math.max(1, biRdd.getNumPartitions))
-    // everything this loop persists; all but the RDD the returned labels
-    // read (`result`) is unpersisted before returning
-    val persisted = scala.collection.mutable.ArrayBuffer.empty[RDD[_]]
-    def persist[T](rdd: RDD[T]): RDD[T] = {
-      persisted += rdd
-      rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    def keyed(df: DataFrame): RDD[(Long, Long)] =
-      persist(df.as[(Long, Long)].rdd.partitionBy(p))
-
-    val edges = persist(biRdd.partitionBy(p))
-    var labels = keyed(
-      vertices.select(col("file_id"), col("file_id").as("cluster_id")))
-    var result: RDD[_] = labels
-    var frontier = labels
-    var iter = 0
-
-    resumableSnapshot(durable, maxIterations, lineageToken).foreach {
-      case (io, i) =>
-        val snap = io.read(snapshotStage(i))
-        labels = keyed(snap.select("file_id", "cluster_id"))
-        result = labels
-        frontier = keyed(snap.where(col("in_frontier"))
-          .select("file_id", "cluster_id"))
-        iter = i
-    }
-
-    var prev: RDD[(Long, (Long, Boolean))] = null
-    var done = false
-    while (!done && iter < maxIterations) {
-      val acc = spark.sparkContext.longAccumulator(s"cc_changed_$iter")
-      // 1. propagation: frontier labels to neighbors (narrow: edges and
-      // frontier share p), min per neighbor, then candidate = min(own,
-      // messages) via a narrow merge against the co-partitioned labels
-      val msgs = edges.join(frontier, p)
-        .map { case (_, (dst, lab)) => (dst, lab) }
-        .reduceByKey(p, (a: Long, b: Long) => math.min(a, b))
-      val cand = labels.leftOuterJoin(msgs, p)
-        .mapValues { case (old, m) =>
-          (old, math.min(old, m.getOrElse(old))) }
-      // 2. pointer jumping — non-root parents only (see the DataFrame
-      // loop's comment; the rules are identical)
-      val parents = cand
-        .filter { case (id, (_, c)) => c != id }
-        .mapValues(_._2)
-      val next = cand
-        .map { case (id, (old, c)) => (c, (id, old)) }
-        .partitionBy(p)
-        .leftOuterJoin(parents, p)
-        .map { case (c, ((id, old), pc)) =>
-          val nl = pc.getOrElse(c)
-          if (nl != old) acc.add(1L)
-          (id, (nl, nl != old))
-        }
-        .partitionBy(p)
-      persist(next)
-      next.count() // ONE materialization per round
-      done = acc.value == 0L
-      labels = next.mapValues(_._1)
-      result = next
-      frontier = next.filter(_._2._2).mapValues(_._1)
-      if (prev != null) prev.unpersist(false)
-      prev = next
-      iter += 1
-
-      durable.foreach { case (io, k) =>
-        if (!done && iter % k == 0) {
-          val snap = io.stage(snapshotStage(iter),
-            metadata = Map("lineage" -> lineageToken)) {
-            next.map { case (id, (cid, ch)) => (id, cid, ch) }
-              .toDF("file_id", "cluster_id", "in_frontier")
-          }
-          labels = keyed(snap.select("file_id", "cluster_id"))
-          result = labels
-          frontier = keyed(snap.where(col("in_frontier"))
-            .select("file_id", "cluster_id"))
-          dropSupersededSnapshots(io, iter)
-        }
-      }
-    }
-    if (done) durable.foreach { case (io, _) =>
-      dropAllSnapshots(io, maxIterations)
-    }
-    persisted.foreach(r => if (r ne result) r.unpersist(false))
-    (labels.toDF("file_id", "cluster_id"), iter)
   }
 }

@@ -114,7 +114,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       "completed run must remove its loop snapshots")
   }
 
-  test("random graphs match a union-find reference (12 seeded shapes)") {
+  test("random graphs match a union-find reference") {
     // independent oracle: driver-side union-find with min-label
     // normalization; catches any propagation/jump bug (including the
     // non-root parents filter) on arbitrary topologies, not just the
@@ -137,79 +137,41 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       // smaller
       (0 until n).map(v => v.toLong -> find(v).toLong).toMap
     }
-    (0 until 12).foreach { seed =>
+    def randomGraph(seed: Int, maxExtra: Int): (Int, Seq[(Long, Long)]) = {
       val rnd = new scala.util.Random(seed)
-      val n = 8 + rnd.nextInt(40)
-      val nEdges = rnd.nextInt(2 * n)
-      val edges = Seq.fill(nEdges)(
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter { case (a, b) => a != b }
-      val expected = unionFind(n, edges)
-      val got = cluster(0L until n.toLong, edges)
-      assert(got == expected, s"seed=$seed n=$n edges=$edges")
-    }
-  }
-
-  test("small- and large-graph loops agree (labels AND round counts)") {
-    import spark.implicits._
-    // the same seeded random topologies through BOTH physical loops:
-    // smallGraphMaxEdges=0 forces the DataFrame loop, the default runs
-    // the fixed-partitioner RDD loop — identical algorithm, so labels
-    // and round counts must match exactly
-    (0 until 6).foreach { seed =>
-      val rnd = new scala.util.Random(100 + seed)
-      val n = 8 + rnd.nextInt(60)
+      val n = 8 + rnd.nextInt(maxExtra)
       val edges = Seq.fill(rnd.nextInt(2 * n))(
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      val vdf = (0L until n.toLong).toDF("file_id")
-      val edf = edges.toDF("src", "dst")
-      val (small, roundsSmall) =
-        ConnectedComponents.runCounted(spark, vdf, edf)
-      val (large, roundsLarge) = ConnectedComponents.runCounted(
-        spark, vdf, edf, smallGraphMaxEdges = 0L)
-      assert(roundsSmall == roundsLarge, s"seed=$seed")
-      assert(
-        small.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
-          large.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-        s"seed=$seed n=$n edges=$edges")
+      (n, edges)
     }
+    // seeds 0-11 with up to 47 vertices, seeds 100-105 with up to 67
+    val shapes = (0 until 12).map(randomGraph(_, 40)) ++
+      (100 until 106).map(randomGraph(_, 60))
+    shapes.zipWithIndex.foreach { case ((n, edges), i) =>
+      val expected = unionFind(n, edges)
+      val got = cluster(0L until n.toLong, edges)
+      assert(got == expected, s"shape=$i n=$n edges=$edges")
+    }
+
+    // 32-bit vertex and edge ids: same labels, and the ids keep their type
+    import spark.implicits._
+    val (n, edges) = shapes.last
+    val got = ConnectedComponents
+      .run(spark, (0 until n).toDF("file_id"),
+        edges.map { case (a, b) => (a.toInt, b.toInt) }.toDF("src", "dst"))
+      .collect().map(r => r.getInt(0).toLong -> r.getInt(1).toLong).toMap
+    assert(got == unionFind(n, edges), s"IntegerType ids n=$n edges=$edges")
   }
 
-  test("edge endpoints missing from vertices are dropped the same way by both loops") {
+  test("edge endpoints missing from vertices are dropped") {
     import spark.implicits._
     // 9 is not a vertex: it bridges {0,1} and {2,3} only through itself
     val vdf = Seq(0L, 1L, 2L, 3L, 4L).toDF("file_id")
     val edf = Seq((0L, 1L), (1L, 9L), (9L, 2L), (2L, 3L)).toDF("src", "dst")
-    def labels(smallGraphMaxEdges: Long): Map[Long, Long] =
-      ConnectedComponents.run(spark, vdf, edf,
-        smallGraphMaxEdges = smallGraphMaxEdges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val expected = Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L, 4L -> 4L)
-    assert(labels(0L) === expected)
-    assert(labels(ConnectedComponents.SmallGraphMaxEdges) === expected)
-  }
-
-  test("small-graph loop leaves only its result persisted") {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val vertices = (0L until 512L).toDF("file_id")
-    val edges = (0L until 511L).map(i => (i, i + 1)).toDF("src", "dst")
-    val io = new graft.io.TableIO(spark,
-      java.nio.file.Files.createTempDirectory("graft-cc-persist").toString)
-    // a killed run and its resume: initial labels, edges, every round and
-    // the keyed snapshot copies of both runs are persisted along the way
-    val runs = Seq(4, 50).map { maxIterations =>
-      val before = sc.getPersistentRDDs.keySet
-      val (labels, _) = ConnectedComponents.runCounted(spark, vertices,
-        edges, maxIterations = maxIterations, durable = Some((io, 2)))
-      val left = sc.getPersistentRDDs.keySet.diff(before)
-      (labels.collect().map(_.getLong(1)).toSet, left.size)
-    }
-    assert(runs.last._1 === Set(0L))
-    // the edge table's localCheckpoint (taken before the loop) + the
-    // result the returned labels read
-    runs.foreach { case (_, left) => assert(left <= 2, s"$left RDDs left") }
+    val got = ConnectedComponents.run(spark, vdf, edf)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L, 4L -> 4L))
   }
 
   test("pointer jumping converges in O(log diameter) rounds") {
