@@ -95,14 +95,9 @@ object ScalingBench {
         if (skewed)
           pipeline.RepoFiles.generateSkewed(spark, nFiles, seed = 42L)
         else pipeline.RepoFiles.generate(spark, nFiles, seed = 42L)
-      val tokens = pipeline.Tokenizer.pruneCommon(
-        pipeline.Tokenizer.tokenize(files), knownFileCount = nFiles)
-      val keys = pipeline.Blocking.blockingKeys(tokens)
-      val pairs = pipeline.Blocking.candidatePairs(keys)
-      val edges = pipeline.Scoring.edges(pipeline.Scoring.score(pairs))
-      val clusters = pipeline.ConnectedComponents
-        .run(spark, files.select("file_id"), edges)
-      clusters.groupBy("cluster_id").agg(count(lit(1))).count()
+      new pipeline.LinkagePipeline.Stages(spark, files,
+        pipeline.LinkagePipeline.InMemory(nFiles)).clusters
+        .groupBy("cluster_id").agg(count(lit(1))).count()
       (System.nanoTime() - t0) / 1e9
     } finally spark.stop()
   }

@@ -7,7 +7,8 @@ import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions._
 import graft.goldens.Goldens
 import graft.ops.{Dedup, Multimodal, SimilaritySearch, TextAnalysis}
-import graft.pipeline.{Blocking, RepoFiles, Scoring, Tokenizer}
+import graft.pipeline.{LinkagePipeline, RepoFiles, Tokenizer}
+import graft.pipeline.LinkagePipeline.InMemory
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -576,15 +577,8 @@ object SparkEntry {
     * repo-file table (north rule shape); driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame = {
-    reg(spark)
     val files = RepoFiles.generate(spark, nFiles = 500, seed = 42L)
-    val tokens =
-      Tokenizer.pruneCommon(Tokenizer.tokenize(files), knownFileCount = 500)
-    val keys = Blocking.blockingKeys(tokens)
-    val pairs = Blocking.candidatePairs(keys)
-    val edges = Scoring.edges(Scoring.score(pairs))
-    graft.pipeline.ConnectedComponents
-      .run(spark, files.select("file_id"), edges, canonicalEdges = true)
+    new LinkagePipeline.Stages(spark, files, InMemory(500)).clusters
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
   }
@@ -971,21 +965,11 @@ object SparkEntry {
     // matches if the resumed run converges to exactly the clusters an
     // uninterrupted run produces.
     "q_cc_resume" -> ((s, _) => {
-      reg(s)
       val dir = scratchDir("graft_cc_resume")
       try {
         val files = RepoFiles.generate(s, nFiles = 1000, seed = 42L,
           partitions = genParts(s, 1000))
-        val tokens =
-          Tokenizer.pruneCommon(
-          // tokenize materialized once: pruneCommon's document-frequency
-          // branch and its pruning join would otherwise each re-run the
-          // generate+tokenize chain (the staged-pipeline equivalent is
-          // the committed tokens stage in LinkagePipeline)
-          Tokenizer.tokenize(files).localCheckpoint(),
-          knownFileCount = 1000)
-        val edges = Scoring.edges(Scoring.score(
-          Blocking.candidatePairs(Blocking.blockingKeys(tokens))))
+        val edges = new LinkagePipeline.Stages(s, files, InMemory(1000)).edges
           .localCheckpoint() // one edge materialization shared by both runs
         val io1 = new graft.io.TableIO(s, dir.toString)
         val (_, iterKilled) = graft.pipeline.ConnectedComponents.runCounted(
@@ -1018,22 +1002,9 @@ object SparkEntry {
     }),
     // ---- the linkage pipeline itself (north rule; rows-only) ----
     "q_linkage_clusters" -> ((s, dir) => {
-      reg(s)
       val files = RepoFiles.generate(s, nFiles = 1000, seed = 42L,
         partitions = genParts(s, 1000))
-      val tokens =
-        Tokenizer.pruneCommon(
-          // tokenize materialized once: pruneCommon's document-frequency
-          // branch and its pruning join would otherwise each re-run the
-          // generate+tokenize chain (the staged-pipeline equivalent is
-          // the committed tokens stage in LinkagePipeline)
-          Tokenizer.tokenize(files).localCheckpoint(),
-          knownFileCount = 1000)
-      val keys = Blocking.blockingKeys(tokens)
-      val pairs = Blocking.candidatePairs(keys)
-      val edges = Scoring.edges(Scoring.score(pairs))
-      graft.pipeline.ConnectedComponents
-        .run(s, files.select("file_id"), edges, canonicalEdges = true)
+      new LinkagePipeline.Stages(s, files, InMemory(1000)).clusters
         .join(files.select("file_id", "entity_id"), "file_id")
         .groupBy("cluster_id")
         .agg(count(lit(1)).as("cluster_size"),

@@ -144,7 +144,7 @@ object Blocking {
     // window exchange shuffles next anyway (key, file_id, token) and
     // spills to disk under pressure (interleaved A/B at 200k and 800k
     // files: parity-to-faster vs the recompute-twice shape, identical
-    // pair counts — tools/PairsProbe)
+    // pair counts — recorded in OPTIMIZATION_r06.md, section 2)
     val keyRows = if (materializeKeys) keys.localCheckpoint() else keys
     // Block sizing WITHOUT a per-key window: a count(*) over
     // Window.partitionBy(key) would funnel every row of a degenerate block

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Transitive closure via min-label propagation with pointer jumping.
@@ -18,7 +19,10 @@ import org.apache.spark.sql.functions._
   * sorted-neighborhood chains make long thin components at 10^12 rows.
   *
   * Each round localCheckpoints its labels to cut lineage, so the plan
-  * stays the same size however many rounds run.
+  * stays the same size however many rounds run. A round's checkpoint is
+  * unpersisted once the next round or a durable snapshot supersedes it,
+  * and the edge table's on return, so a call leaves only its result's
+  * checkpoint persisted.
   *
   * Restart story, two tiers: by default a driver restart resumes from the
   * last pipeline-stage checkpoint (TableIO) and replays the whole loop —
@@ -61,6 +65,16 @@ object ConnectedComponents {
   private def dropSupersededSnapshots(io: graft.io.TableIO, upto: Int): Unit =
     (1 until upto).foreach(i =>
       if (io.isCommitted(snapshotStage(i))) io.invalidate(snapshotStage(i)))
+
+  /** Unpersist the RDD behind a localCheckpointed Dataset. Spark logs a
+    * warning that its lineage cannot be recomputed: nothing reads it
+    * again, so that is intended.
+    */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   private def dropAllSnapshots(io: graft.io.TableIO, maxIterations: Int): Unit =
     (1 to maxIterations).foreach(i =>
@@ -117,12 +131,20 @@ object ConnectedComponents {
     val biEdges = (if (canonicalEdges) bi0 else bi0.dropDuplicates("src", "dst"))
       .localCheckpoint()
 
-    var labels = vertices
+    val initial = vertices
       .select(col("file_id"), col("file_id").as("cluster_id"))
       .localCheckpoint()
-
+    var labels = initial
     var frontier = labels
     var iter = 0
+
+    // the localCheckpoint `labels` reads, if any: released as soon as a
+    // newer round or a snapshot replaces it
+    var labelsCheckpoint: Option[DataFrame] = Some(initial)
+    def supersede(by: Option[DataFrame]): Unit = {
+      labelsCheckpoint.foreach(release)
+      labelsCheckpoint = by
+    }
 
     // resume the loop from the newest committed durable snapshot — but
     // only if it was computed against THIS graph (lineage stamp matches);
@@ -135,6 +157,7 @@ object ConnectedComponents {
         frontier = snap.where(col("in_frontier"))
           .select("file_id", "cluster_id")
         iter = i
+        supersede(None)
     }
 
     var done = false
@@ -191,6 +214,7 @@ object ConnectedComponents {
         .localCheckpoint() // ONE materialization per round
 
       done = obs.get("changed_n").asInstanceOf[Long] == 0L
+      supersede(Some(next))
       labels = next.select("file_id", "cluster_id")
       frontier = next.where(col("changed")).select("file_id", "cluster_id")
       iter += 1
@@ -209,6 +233,7 @@ object ConnectedComponents {
           labels = snap.select("file_id", "cluster_id")
           frontier = snap.where(col("in_frontier"))
             .select("file_id", "cluster_id")
+          supersede(None)
           // older snapshots are superseded — drop them so storage stays
           // bounded at one snapshot regardless of round count
           dropSupersededSnapshots(io, iter)
@@ -219,6 +244,7 @@ object ConnectedComponents {
     if (done) durable.foreach { case (io, _) =>
       dropAllSnapshots(io, maxIterations)
     }
+    release(biEdges)
     (labels, iter)
   }
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-/** Cluster-quality audit of the raw linkage chain at scale: size
+/** Cluster-quality audit of the linkage chain at scale: size
   * distribution, purity (entities per cluster), cohesion (clusters per
   * entity). Usage: ClusterAudit <nFiles> <cpus>
   */
@@ -14,14 +14,8 @@ object ClusterAudit {
 
     val files = graft.pipeline.RepoFiles.generate(spark, nFiles, seed = 42L)
       .localCheckpoint()
-    val tokens = graft.pipeline.Tokenizer.pruneCommon(
-      graft.pipeline.Tokenizer.tokenize(files), knownFileCount = nFiles)
-    val keys = graft.pipeline.Blocking.blockingKeys(tokens)
-    val pairs = graft.pipeline.Blocking.candidatePairs(keys)
-    val edges = graft.pipeline.Scoring.edges(
-      graft.pipeline.Scoring.score(pairs)).localCheckpoint()
-    val clusters = graft.pipeline.ConnectedComponents
-      .run(spark, files.select("file_id"), edges).localCheckpoint()
+    val clusters = new graft.pipeline.LinkagePipeline.Stages(spark, files,
+      graft.pipeline.LinkagePipeline.InMemory(nFiles)).clusters
 
     val joined = clusters.join(files.select("file_id", "entity_id"), "file_id")
       .localCheckpoint()

@@ -174,6 +174,27 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(got === Map(0L -> 0L, 1L -> 0L, 2L -> 2L, 3L -> 2L, 4L -> 4L))
   }
 
+  test("a materialized call leaves at most its result persisted") {
+    import spark.implicits._
+    val n = 512L
+    val vertices = (0L until n).toDF("file_id")
+    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val io = new graft.io.TableIO(spark,
+      java.nio.file.Files.createTempDirectory("graft-cc-leak").toString)
+    // plain, and with durable snapshots replacing some rounds' checkpoints
+    Seq(None, Some((io, 2))).foreach { durable =>
+      val before = sc.getPersistentRDDs.keySet
+      val (labels, rounds) =
+        ConnectedComponents.runCounted(spark, vertices, edges, durable = durable)
+      assert(labels.collect().map(_.getLong(1)).toSet === Set(0L))
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(rounds > 2)
+      assert(left.size <= 1,
+        s"$rounds rounds (durable = ${durable.isDefined}) left ${left.size} RDDs persisted")
+    }
+  }
+
   test("pointer jumping converges in O(log diameter) rounds") {
     import spark.implicits._
     // 512-vertex path: plain propagation would need ~512 rounds

@@ -196,6 +196,31 @@ class LinkagePipelineSpec extends AnyFunSuite {
       s"repeat run compiled $compiledSecond classes (first run: $compiledFirst)")
   }
 
+  test("durable and in-memory policies produce the same clusters") {
+    import LinkagePipeline.{Durable, InMemory}
+    val files = RepoFiles.generate(spark, nFiles = 2000, seed = 42L)
+    def clusters(policy: LinkagePipeline.Materialization): Seq[(Long, Long)] =
+      new LinkagePipeline.Stages(spark, files, policy).clusters
+        .select("file_id", "cluster_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val durable = clusters(Durable(new TableIO(spark, tmpDir("graft-policy"))))
+    val inMemory = clusters(InMemory(2000))
+    assert(durable.size == 2000)
+    assert(inMemory == durable)
+  }
+
+  test("reading edges on a durable run commits edges, not clusters") {
+    val io = new TableIO(spark, tmpDir("graft-edges"))
+    val files = RepoFiles.generate(spark, nFiles = 200, seed = 7L)
+    val stages =
+      new LinkagePipeline.Stages(spark, files, LinkagePipeline.Durable(io))
+    assert(stages.edges.count() > 0)
+    Seq("input", "tokens", "blocking_keys", "candidate_pairs", "scored_pairs",
+      "edges").foreach(st => assert(io.isCommitted(st), s"$st not committed"))
+    assert(!io.isCommitted("clusters"))
+    assert(!io.isCommitted("resolved"))
+  }
+
   test("resume: second run reuses committed checkpoints") {
     val dir = tmpDir("graft-resume")
     val files = RepoFiles.generate(spark, nFiles = 200, seed = 7L)
