@@ -2,16 +2,80 @@ package graft.io
 
 import java.nio.charset.StandardCharsets
 
+import scala.collection.immutable.TreeMap
+
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.{DeserializationFeature, PropertyNamingStrategies}
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.{DataType, StructType}
+
+/** A stage's committed snapshot record, stored as `<stage>.manifest.json`
+  * in compact JSON with snake_case field names (`commit_token`,
+  * `schema_b64`, ...).
+  *
+  * @param upstreamTokens the `commitToken` of each committed `upstream`
+  *   stage at the time this stage was computed
+  * @param commitToken opaque identity of this commit (a fresh UUID)
+  * @param schemaB64 base64 of the schema JSON for unpartitioned stages,
+  *   empty for partitioned ones
+  * @param committedAt ISO-8601 commit instant, recorded for inspection;
+  *   staleness never compares it
+  */
+final case class Manifest(
+    stage: String,
+    rows: Long,
+    files: Int,
+    bytes: Long,
+    fileBytes: Manifest.FileBytes,
+    rowsPerSec: Long,
+    upstream: Seq[String],
+    upstreamTokens: Map[String, String],
+    commitToken: String,
+    schemaB64: String,
+    metadata: Map[String, String],
+    elapsedMs: Long,
+    committedAt: String) {
+
+  /** The committed schema, so [[TableIO.read]] skips the per-read footer
+    * schema-inference pass — the catalog role Iceberg metadata plays.
+    * `None` for partitioned stages: an explicit schema on a partitioned
+    * read would reorder partition columns against inference. Stored as
+    * base64 only because the benchmark's manifest check regex-reads
+    * `schema_b64` as one quote-free string.
+    */
+  def schema: Option[StructType] =
+    Some(schemaB64).filter(_.nonEmpty).map { b64 =>
+      DataType.fromJson(new String(
+        java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8))
+        .asInstanceOf[StructType]
+    }
+}
+
+object Manifest {
+  /** Smallest, mean and largest parquet file size of the commit. */
+  final case class FileBytes(min: Long, mean: Long, max: Long)
+
+  /** Reads and writes [[Manifest]]; a file missing any field does not
+    * parse.
+    */
+  private[io] val mapper = JsonMapper.builder()
+    .addModule(DefaultScalaModule)
+    .propertyNamingStrategy(PropertyNamingStrategies.SNAKE_CASE)
+    .enable(DeserializationFeature.FAIL_ON_MISSING_CREATOR_PROPERTIES)
+    .build()
+}
 
 /** Iceberg-shaped checkpoint layer over parquet (no Iceberg jar ships in
   * this environment — see SURVEY.md §7): every stage commit is
-  * write-to-temp + filesystem rename + JSON snapshot manifest, so a killed
-  * job resumes from the last committed snapshot and a half-written stage
-  * is never read. Swap [[TableIO]] for a real Iceberg catalog by replacing
-  * this one class.
+  * write-to-temp + filesystem rename + a [[Manifest]] renamed into place,
+  * so a killed job resumes from the last committed snapshot and a
+  * half-written stage is never read. A stage whose manifest is missing or
+  * does not parse is uncommitted. Swap [[TableIO]] for a real Iceberg
+  * catalog by replacing this one class.
   *
   * Cluster-real I/O: all paths go through the Hadoop [[FileSystem]] API,
   * so the same code runs on HDFS (atomic dir rename), S3A (copy-rename),
@@ -19,6 +83,10 @@ import org.apache.spark.sql.functions.{count, lit}
   * filesystem. Metrics are collected DURING the write via `observe()`
   * (row count in one pass, no second scan) plus parquet file sizes from
   * directory metadata; nothing re-reads committed data.
+  *
+  * Stage names are directory names under `root`: each must be one
+  * non-empty path segment, without `/`. Metadata keys and values are
+  * arbitrary strings.
   */
 final class TableIO(spark: SparkSession, root: String) {
 
@@ -31,29 +99,12 @@ final class TableIO(spark: SparkSession, root: String) {
   private def manifestPath(stage: String): Path =
     new Path(rootPath, s"$stage.manifest.json")
 
-  def isCommitted(stage: String): Boolean = fs.exists(manifestPath(stage))
+  def isCommitted(stage: String): Boolean = manifest(stage).isDefined
 
-  /** Committed schema from the stage manifest (recorded at commit for
-    * unpartitioned stages), so [[read]] skips the per-read footer
-    * schema-inference pass — the catalog role Iceberg metadata plays.
-    * Base64-wrapped because raw schema JSON carries every character the
-    * manifest format forbids. Partitioned stages record an empty
-    * `schema_b64`, which means "no committed schema": [[read]] infers.
-    */
-  private def committedSchema(stage: String): Option[org.apache.spark.sql.types.StructType] =
-    manifest(stage).flatMap { m =>
-      "\"schema_b64\":\"([A-Za-z0-9+/=]*)\"".r.findFirstMatchIn(m)
-        .map(_.group(1))
-    }.filter(_.nonEmpty).flatMap { b64 =>
-      try Some(org.apache.spark.sql.types.DataType
-        .fromJson(new String(
-          java.util.Base64.getDecoder.decode(b64), StandardCharsets.UTF_8))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      catch { case _: Exception => None } // corrupt manifest: infer
-    }
+  def read(stage: String): DataFrame = read(stage, manifest(stage))
 
-  def read(stage: String): DataFrame =
-    committedSchema(stage) match {
+  private def read(stage: String, m: Option[Manifest]): DataFrame =
+    m.flatMap(_.schema) match {
       case Some(s) => spark.read.schema(s).parquet(stageDir(stage).toString)
       case None => spark.read.parquet(stageDir(stage).toString)
     }
@@ -72,6 +123,9 @@ final class TableIO(spark: SparkSession, root: String) {
     * same-instant recommit cannot make a stale stage look fresh). Stale
     * stages are invalidated and recomputed. (Non-stage upstream entries
     * have no manifest on either side of the comparison and are ignored.)
+    * The check parses this stage's manifest and each upstream's once; a
+    * recompute reads the upstream tokens again after `compute`, which may
+    * commit them.
     */
   def stage(
       stage: String,
@@ -79,38 +133,13 @@ final class TableIO(spark: SparkSession, root: String) {
       partitionBy: Seq[String] = Nil,
       metadata: Map[String, String] = Map.empty)(
       compute: => DataFrame): DataFrame = {
-    requireManifestSafe("stage name", stage)
-    upstream.foreach(requireManifestSafe("upstream name", _))
-    metadata.foreach { case (k, v) =>
-      requireManifestSafe("metadata key", k)
-      requireManifestSafe(s"metadata value of '$k'", v)
-    }
-    if (isCommitted(stage)) {
-      val stale = upstream.exists { u =>
-        (committedToken(u), upstreamTokenOf(stage, u)) match {
-          case (None, None) =>
-            // either a non-stage upstream entry (no manifest on either
-            // side — fresh), or a PRE-TOKEN manifest pair written by an
-            // older build: fall back to the wall-clock ordering those
-            // manifests do carry, judging same-or-later upstream
-            // commits stale (conservative: recompute beats silently
-            // resuming against a recomputed upstream)
-            (committedAt(u), committedAt(stage)) match {
-              case (Some(up), Some(down)) =>
-                !java.time.Instant.parse(up)
-                  .isBefore(java.time.Instant.parse(down))
-              case _ => false
-            }
-          // any other mismatch — recomputed upstream (different token),
-          // upstream invalidated since (Some -> None), or upstream
-          // committed where none existed when this stage ran
-          // (None -> Some) — is stale
-          case (a, b) => a != b
-        }
-      }
-      if (!stale) return read(stage)
-      invalidate(stage)
-    }
+    require(stage.nonEmpty && !stage.contains('/'),
+      s"stage name '$stage' must be one non-empty path segment without '/'")
+    val committed = manifest(stage)
+    val fresh = committed.exists(m => upstream.forall(u =>
+      manifest(u).map(_.commitToken) == m.upstreamTokens.get(u)))
+    if (fresh) return read(stage, committed)
+    invalidate(stage)
 
     val t0 = System.nanoTime()
     val df = compute
@@ -139,45 +168,36 @@ final class TableIO(spark: SparkSession, root: String) {
         s"commit rename failed for stage '$stage' ($tmp -> ${stageDir(stage)})")
 
     val elapsedMs = (System.nanoTime() - t0) / 1000000
-    val metaJson = metadata.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString(",")
-    // committed schema (unpartitioned stages only: an explicit schema on
-    // a partitioned read would reorder partition columns vs inference,
-    // and hive-partitioned stages keep the inference path)
-    val schemaB64 =
-      if (partitionBy.isEmpty)
-        java.util.Base64.getEncoder.encodeToString(
-          df.schema.json.getBytes(StandardCharsets.UTF_8))
-      else ""
-    // opaque per-commit identity + the upstream tokens this output was
-    // computed against — the staleness guard compares these by equality
-    val commitToken = java.util.UUID.randomUUID().toString
-    val upTokens = upstream.sorted.distinct
-      .flatMap(u => committedToken(u).map(t => "\"" + u + "\":\"" + t + "\""))
-      .mkString(",")
-    val manifest =
-      s"""{"stage":"$stage","rows":$rows,"files":$nFiles,
-         |"bytes":$totalBytes,
-         |"file_bytes":{"min":${if (nFiles == 0) 0L else sizes.head},
-         |"mean":${if (nFiles == 0) 0L else totalBytes / nFiles},
-         |"max":${if (nFiles == 0) 0L else sizes.last}},
-         |"rows_per_sec":${if (elapsedMs == 0) 0 else rows * 1000 / elapsedMs},
-         |"upstream":[${upstream.map(u => "\"" + u + "\"").mkString(",")}],
-         |"upstream_tokens":{$upTokens},
-         |"commit_token":"$commitToken",
-         |"schema_b64":"$schemaB64",
-         |"metadata":{$metaJson},
-         |"elapsed_ms":$elapsedMs,
-         |"committed_at":"${java.time.Instant.now()}"}""".stripMargin
+    val m = Manifest(
+      stage = stage,
+      rows = rows,
+      files = nFiles,
+      bytes = totalBytes,
+      fileBytes = Manifest.FileBytes(
+        min = if (nFiles == 0) 0L else sizes.head,
+        mean = if (nFiles == 0) 0L else totalBytes / nFiles,
+        max = if (nFiles == 0) 0L else sizes.last),
+      rowsPerSec = if (elapsedMs == 0) 0 else rows * 1000 / elapsedMs,
+      upstream = upstream,
+      upstreamTokens = TreeMap.from(
+        upstream.flatMap(u => manifest(u).map(u -> _.commitToken))),
+      commitToken = java.util.UUID.randomUUID().toString,
+      schemaB64 =
+        if (partitionBy.isEmpty)
+          java.util.Base64.getEncoder.encodeToString(
+            df.schema.json.getBytes(StandardCharsets.UTF_8))
+        else "",
+      metadata = TreeMap.from(metadata),
+      elapsedMs = elapsedMs,
+      committedAt = java.time.Instant.now().toString)
     val tmpManifest = new Path(rootPath, s"_tmp_$stage.manifest.json")
     val out = fs.create(tmpManifest, true)
-    try out.write(manifest.getBytes(StandardCharsets.UTF_8))
+    try out.write(Manifest.mapper.writeValueAsBytes(m))
     finally out.close()
     if (!fs.rename(tmpManifest, manifestPath(stage)))
       throw new java.io.IOException(
         s"manifest rename failed for stage '$stage'")
-    read(stage)
+    read(stage, Some(m))
   }
 
   private def listParquetFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -201,74 +221,28 @@ final class TableIO(spark: SparkSession, root: String) {
     * cardinality (e.g. document-frequency caps) read a number instead of
     * launching a count job over committed data.
     */
-  def committedRows(stage: String): Option[Long] =
-    manifest(stage).flatMap { m =>
-      "\"rows\":(\\d+)".r.findFirstMatchIn(m).map(_.group(1).toLong)
-    }
-
-  /** Commit timestamp from the stage manifest — distinct per commit, so it
-    * doubles as a cheap input-lineage token: downstream durable state (e.g.
-    * connected-components loop snapshots) stamps itself with the upstream
-    * stage's `committedAt` and refuses to resume if the upstream has been
-    * recomputed since.
-    */
-  def committedAt(stage: String): Option[String] =
-    manifest(stage).flatMap { m =>
-      "\"committed_at\":\"([^\"]+)\"".r.findFirstMatchIn(m).map(_.group(1))
-    }
+  def committedRows(stage: String): Option[Long] = manifest(stage).map(_.rows)
 
   /** Opaque identity of a stage's current commit (a fresh UUID per
     * commit). Downstream durable state records this and refuses to
-    * resume on mismatch — unlike [[committedAt]] ordering, equality of
-    * opaque tokens is immune to clock skew between writers and to two
-    * commits landing on the same instant.
+    * resume on mismatch — equality of opaque tokens is immune to clock
+    * skew between writers and to two commits landing on the same instant.
     */
   def committedToken(stage: String): Option[String] =
-    manifest(stage).flatMap { m =>
-      "\"commit_token\":\"([^\"]*)\"".r.findFirstMatchIn(m).map(_.group(1))
-    }
+    manifest(stage).map(_.commitToken)
 
-  /** The upstream commit token recorded in `stage`'s manifest when it was
-    * computed (absent for non-stage upstream entries and for upstreams
-    * that were uncommitted at the time).
+  /** The stage's committed manifest, read and parsed once per call.
+    * `None` when there is none, or when the file does not parse as a
+    * [[Manifest]] (truncated, not JSON, or missing a field): such a stage
+    * is uncommitted, and [[stage]] recomputes it.
     */
-  private def upstreamTokenOf(stage: String, up: String): Option[String] =
-    manifest(stage).flatMap { m =>
-      ("\"upstream_tokens\":\\{[^}]*\"" +
-        java.util.regex.Pattern.quote(up) +
-        "\":\"([^\"]*)\"").r.findFirstMatchIn(m).map(_.group(1))
-    }
-
-  /** A caller-supplied metadata value recorded at commit time (e.g. the
-    * input-lineage token the connected-components loop snapshots stamp
-    * themselves with). Keys and values are validated at [[stage]] time
-    * to contain none of `"`/`}`/`\` — the characters that would derail
-    * this single-object scan — so the regex parse is sound for every
-    * manifest this class can produce.
-    */
-  def metadataOf(stage: String, key: String): Option[String] =
-    manifest(stage).flatMap { m =>
-      ("\"metadata\":\\{[^}]*\"" + java.util.regex.Pattern.quote(key) +
-        "\":\"([^\"]*)\"").r.findFirstMatchIn(m).map(_.group(1))
-    }
-
-  /** Reject strings that would break the manifest's JSON layout or its
-    * regex readers: '"' and '\' corrupt/escape string literals, '}' ends
-    * the single-level object scans early. Stage names double as
-    * filesystem path segments, so '/' is rejected there implicitly by
-    * the same contract (callers use flat names).
-    */
-  private def requireManifestSafe(what: String, s: String): Unit =
-    require(!s.exists(c => c == '"' || c == '\\' || c == '}'),
-      s"""$what "$s" contains one of the manifest-unsafe characters """ +
-        """'"', '\', '}'""")
-
-  def manifest(stage: String): Option[String] =
-    if (isCommitted(stage)) {
+  def manifest(stage: String): Option[Manifest] =
+    try {
       val in = fs.open(manifestPath(stage))
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in),
-        StandardCharsets.UTF_8))
+      try Option(Manifest.mapper.readValue(in: java.io.InputStream, classOf[Manifest]))
       finally in.close()
-    } else None
+    } catch {
+      case _: java.io.FileNotFoundException | _: JsonProcessingException =>
+        None
+    }
 }

@@ -38,10 +38,10 @@ object ConnectedComponents {
   private def snapshotStage(i: Int): String = s"cc_round_$i"
 
   /** The lineage token recorded in a committed loop snapshot's manifest
-    * (a first-class TableIO metadata field).
+    * metadata.
     */
   private def recordedToken(io: graft.io.TableIO, stage: String): String =
-    io.metadataOf(stage, "lineage").getOrElse("")
+    io.manifest(stage).flatMap(_.metadata.get("lineage")).getOrElse("")
 
   /** The resume decision: newest committed snapshot with a matching
     * lineage stamp, else invalidate all snapshots.

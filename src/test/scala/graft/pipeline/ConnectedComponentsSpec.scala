@@ -55,35 +55,38 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val vertices = (0L until n).toDF("file_id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
 
-    val freshClusters = ConnectedComponents.run(spark, vertices, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (fresh, freshRounds) = ConnectedComponents.runCounted(spark, vertices, edges)
+    val freshClusters = fresh.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(freshRounds > 2, s"the 512-path must need several rounds: $freshRounds")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc").toString
-    val io = new graft.io.TableIO(spark, dir)
-    // "kill" the job mid-closure: cap at 4 rounds with a snapshot every 2 —
-    // the 512-path needs ~10, so this run stops with a committed round-4
-    // snapshot and an UNfinished labeling
-    val (partial, itersPartial) = ConnectedComponents.runCounted(
-      spark, vertices, edges, maxIterations = 4, durable = Some((io, 2)))
-    assert(itersPartial == 4)
-    assert(io.isCommitted("cc_round_4"), "mid-loop snapshot must be committed")
-    assert(!io.isCommitted("cc_round_2"), "superseded snapshot must be pruned")
-    assert(partial.collect().map(_.getLong(1)).toSet.size > 1,
-      "4 rounds must NOT be enough — otherwise this test kills nothing")
+    // "kill" the job after every round k the fresh run needed but its
+    // last, with a snapshot every round
+    (1 until freshRounds).foreach { k =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-cc").toString
+      val io = new graft.io.TableIO(spark, dir)
+      val (_, itersPartial) = ConnectedComponents.runCounted(
+        spark, vertices, edges, maxIterations = k, durable = Some((io, 1)))
+      assert(itersPartial == k)
+      // a completed run drops its snapshots, so a committed one shows the
+      // loop was cut before it saw a round without changes
+      assert(io.isCommitted(s"cc_round_$k"), s"round-$k snapshot must be committed")
+      assert(k == 1 || !io.isCommitted(s"cc_round_${k - 1}"),
+        "superseded snapshot must be pruned")
 
-    // restart: a fresh invocation over the same TableIO root must resume
-    // from round 4 (not replay from round 0) and converge to the same
-    // clusters as the uninterrupted run
-    val (resumed, itersTotal) = ConnectedComponents.runCounted(
-      spark, vertices, edges, durable = Some((io, 2)))
-    val resumedClusters = resumed.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(resumedClusters == freshClusters)
-    assert(itersTotal > 4, "resumed run continues the loop counter")
-    assert(itersTotal <= 14, s"resume must not replay from scratch: $itersTotal")
-    // completion cleans up the scratch snapshots
-    assert((1 to 50).forall(i => !io.isCommitted(s"cc_round_$i")),
-      "completed run must remove its loop snapshots")
+      // restart: a fresh invocation over the same root must resume from
+      // round k (not replay from round 0) and converge to the same
+      // clusters as the uninterrupted run
+      val (resumed, itersTotal) = ConnectedComponents.runCounted(spark,
+        vertices, edges, durable = Some((new graft.io.TableIO(spark, dir), 1)))
+      val resumedClusters = resumed.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(resumedClusters == freshClusters, s"killed after round $k")
+      assert(itersTotal > k, "resumed run continues the loop counter")
+      assert(itersTotal <= 14, s"resume must not replay from scratch: $itersTotal")
+      // completion cleans up the scratch snapshots
+      val leftover = new java.io.File(dir).list().filter(_.contains("cc_round_"))
+      assert(leftover.isEmpty, s"killed after round $k: ${leftover.mkString(", ")}")
+    }
   }
 
   test("stale snapshots (lineage-token mismatch) are discarded, not resumed") {
