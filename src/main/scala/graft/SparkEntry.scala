@@ -958,31 +958,37 @@ object SparkEntry {
           .foreach(p => java.nio.file.Files.deleteIfExists(p))
       }
     }),
-    // durable-CC kill-and-resume: run the closure loop capped at 2 rounds
-    // with snapshots every 2 (leaves cc_round_2 committed — the "killed
-    // driver" state), then a FRESH TableIO resumes the loop mid-closure
-    // from that snapshot and finishes. The perfect-clustering oracle only
-    // matches if the resumed run converges to exactly the clusters an
-    // uninterrupted run produces.
+    // durable-CC kill-and-resume: run the closure loop capped at 1 round
+    // with a snapshot every round (leaves cc_round_1 committed — the
+    // "killed driver" state), then a FRESH TableIO resumes the loop
+    // mid-closure from that snapshot and finishes. The perfect-clustering
+    // oracle only matches if the resumed run converges to exactly the
+    // clusters an uninterrupted run produces.
     "q_cc_resume" -> ((s, _) => {
       val dir = scratchDir("graft_cc_resume")
+      // everything this query localCheckpoints except its result: released
+      // on every exit path
+      var checkpoints = Seq.empty[DataFrame]
       try {
         val files = RepoFiles.generate(s, nFiles = 1000, seed = 42L,
           partitions = genParts(s, 1000))
-        val edges = new LinkagePipeline.Stages(s, files, InMemory(1000)).edges
+        val pipelineEdges =
+          new LinkagePipeline.Stages(s, files, InMemory(1000)).edges
+        val edges = pipelineEdges
           .localCheckpoint() // one edge materialization shared by both runs
+        checkpoints = Seq(pipelineEdges, edges)
         val io1 = new graft.io.TableIO(s, dir.toString)
         val (_, iterKilled) = graft.pipeline.ConnectedComponents.runCounted(
-          s, files.select("file_id"), edges, maxIterations = 2,
-          durable = Some((io1, 2)), lineageToken = "edges-fixture-v1",
-          canonicalEdges = true)
-        require(iterKilled == 2 && io1.isCommitted("cc_round_2"),
+          s, files.select("file_id"), edges, maxIterations = 1,
+          durable = Some((io1, 1)), lineageToken = "edges-fixture-v1")
+        require(iterKilled == 1 && io1.isCommitted("cc_round_1"),
           "phase 1 must stop mid-closure with a committed snapshot")
         val io2 = new graft.io.TableIO(s, dir.toString) // fresh driver, same root
-        graft.pipeline.ConnectedComponents.run(
+        val labels = graft.pipeline.ConnectedComponents.run(
           s, files.select("file_id"), edges,
-          durable = Some((io2, 2)), lineageToken = "edges-fixture-v1",
-          canonicalEdges = true)
+          durable = Some((io2, 1)), lineageToken = "edges-fixture-v1")
+        checkpoints :+= labels
+        labels
           .join(files.select("file_id", "entity_id"), "file_id")
           .groupBy("cluster_id")
           .agg(count(lit(1)).as("cluster_size"),
@@ -991,6 +997,7 @@ object SparkEntry {
           // snapshot root below is deleted out from under the plan
           .localCheckpoint()
       } finally {
+        checkpoints.foreach(graft.pipeline.ConnectedComponents.release)
         // the snapshots are single-use fixture state — delete the tree
         // so repeated runs (Verify + Bench pass-pairs) don't pile up
         // temp directories

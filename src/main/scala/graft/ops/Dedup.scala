@@ -260,9 +260,8 @@ object Dedup {
       .where(col("est_jaccard") >= threshold)
       .select(col("id_a").as("src"), col("id_b").as("dst"))
     val vertices = df.select(col(idCol).as("file_id"))
-    val labels = graft.pipeline.ConnectedComponents
-      .run(df.sparkSession, vertices, edges,
-        canonicalEdges = true) // minhash pairs: distinct, id_a < id_b
+    val labels =
+      graft.pipeline.ConnectedComponents.run(df.sparkSession, vertices, edges)
     // -1 stands in for a null text so null-content docs still rank (and a
     // null-text singleton is still its own representative)
     val withLen = labels.join(

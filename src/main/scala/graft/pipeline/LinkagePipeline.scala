@@ -150,8 +150,7 @@ object LinkagePipeline {
           case InMemory(_) => (None, "")
         }
         ConnectedComponents.run(spark, in.select("file_id"), e,
-          durable = durable, lineageToken = lineageToken,
-          canonicalEdges = true) // Scoring.edges: distinct, src < dst
+          durable = durable, lineageToken = lineageToken)
       }
     }
 

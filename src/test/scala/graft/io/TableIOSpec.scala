@@ -2,16 +2,13 @@ package graft.io
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 
 /** TableIO commit protocol: observe()-collected manifest metrics, resume
   * semantics, invalidation, and the outcome of each injected failure.
   */
-class TableIOSpec extends AnyFunSuite {
+class TableIOSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
-
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-tableio").toString
 
   /** Rewrite the file `name` under a TableIO root behind TableIO's back,
     * and drop the Hadoop LocalFileSystem checksum sidecar the rewrite
@@ -29,7 +26,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("stage commit writes a manifest with observed metrics") {
     import spark.implicits._
-    val io = new TableIO(spark, tmpDir())
+    val io = new TableIO(spark, tempDir("graft-tableio"))
     var computed = 0
     val df = io.stage("nums") {
       computed += 1
@@ -63,7 +60,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("partitionBy lays out hive partitions and pruning reaches the scan") {
     import spark.implicits._
-    val root = tmpDir()
+    val root = tempDir("graft-tableio")
     val io = new TableIO(spark, root)
     val df = io.stage("by_lang", partitionBy = Seq("lang")) {
       Seq((1L, "scala"), (2L, "java"), (3L, "scala"), (4L, "rust"))
@@ -84,7 +81,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("a stage whose upstream recomputed after it is not resumed") {
     import spark.implicits._
-    val io = new TableIO(spark, tmpDir())
+    val io = new TableIO(spark, tempDir("graft-tableio"))
     io.stage("a") { (1 to 3).toDF("n") }
     var bComputes = 0
     def computeB() = io.stage("b", upstream = Seq("a")) {
@@ -105,7 +102,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("staleness is judged by opaque commit tokens, not wall-clock order") {
     import spark.implicits._
-    val io = new TableIO(spark, tmpDir())
+    val io = new TableIO(spark, tempDir("graft-tableio"))
     io.stage("a") { (1 to 3).toDF("n") }
     val tok1 = io.committedToken("a")
     assert(tok1.exists(_.nonEmpty), "every commit must mint a token")
@@ -132,7 +129,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("arbitrary metadata round-trips; a stage name must be one path segment") {
     import spark.implicits._
-    val root = tmpDir()
+    val root = tempDir("graft-tableio")
     val io = new TableIO(spark, root)
     val metadata = Map(
       "q\"uote" -> "v\"al}ue",
@@ -154,7 +151,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("a metadata key equal to an upstream name reads the metadata value, not the token") {
     import spark.implicits._
-    val io = new TableIO(spark, tmpDir())
+    val io = new TableIO(spark, tempDir("graft-tableio"))
     io.stage("edges") { (1 to 3).toDF("n") }
     io.stage("s", upstream = Seq("edges"),
       metadata = Map("edges" -> "v1")) { io.read("edges") }
@@ -168,7 +165,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("upstream lineage is recorded") {
     import spark.implicits._
-    val root = tmpDir()
+    val root = tempDir("graft-tableio")
     val io = new TableIO(spark, root)
     io.stage("a") { (1 to 3).toDF("n") }
     io.stage("b", upstream = Seq("a")) { io.read("a") }
@@ -199,7 +196,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("a crash between the data rename and the manifest rename recomputes") {
     import spark.implicits._
-    val root = tmpDir()
+    val root = tempDir("graft-tableio")
     // the killed commit left its data in the stage dir and no manifest
     (7 to 9).toDF("n").write.parquet(s"$root/s")
     val io = new TableIO(spark, root)
@@ -219,7 +216,7 @@ class TableIOSpec extends AnyFunSuite {
       "empty" -> (_ => Array.emptyByteArray),
       "missing fields" -> (_ => "{\"stage\":\"a\",\"rows\":3}".getBytes("UTF-8")))
     corruptions.foreach { case (what, corrupt) =>
-      val root = tmpDir()
+      val root = tempDir("graft-tableio")
       val io = new TableIO(spark, root)
       io.stage("a") { (1 to 3).toDF("n") }
       io.stage("b", upstream = Seq("a")) { io.read("a") }
@@ -241,7 +238,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("leftover temp files from a killed write do not change what stage() returns") {
     import spark.implicits._
-    val root = tmpDir()
+    val root = tempDir("graft-tableio")
     val io = new TableIO(spark, root)
     io.stage("s") { (1 to 3).toDF("n") }
     // a killed recommit of s and a killed first commit of t each left a

@@ -2,11 +2,29 @@ package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSessionTestWrapper
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+import graft.{SparkSessionTestWrapper, TempDirs}
 
 /** Graph-shape unit tests for the frontier-based min-label propagation. */
-class ConnectedComponentsSpec extends AnyFunSuite {
+class ConnectedComponentsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
+
+  /** The n-vertex path 0 - 1 - ... - n-1 as (vertices, edges), its edges
+    * hash-partitioned by `src` over 16 partitions: few neighbouring edges
+    * share a partition, so the per-partition contraction barely shortens
+    * the path and the loop still needs several rounds.
+    */
+  private def spreadPath(n: Long): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    ((0L until n).toDF("file_id"),
+      (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+        .repartition(16, col("src")))
+  }
+
+  private def labelsOf(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   private def cluster(
       vertices: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
@@ -50,19 +68,16 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("durable snapshots: killed mid-loop run resumes and matches a fresh run") {
-    import spark.implicits._
-    val n = 512L
-    val vertices = (0L until n).toDF("file_id")
-    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+    val (vertices, edges) = spreadPath(512L)
 
     val (fresh, freshRounds) = ConnectedComponents.runCounted(spark, vertices, edges)
-    val freshClusters = fresh.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val freshClusters = labelsOf(fresh)
     assert(freshRounds > 2, s"the 512-path must need several rounds: $freshRounds")
 
     // "kill" the job after every round k the fresh run needed but its
     // last, with a snapshot every round
     (1 until freshRounds).foreach { k =>
-      val dir = java.nio.file.Files.createTempDirectory("graft-cc").toString
+      val dir = tempDir("graft-cc")
       val io = new graft.io.TableIO(spark, dir)
       val (_, itersPartial) = ConnectedComponents.runCounted(
         spark, vertices, edges, maxIterations = k, durable = Some((io, 1)))
@@ -78,9 +93,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
       // clusters as the uninterrupted run
       val (resumed, itersTotal) = ConnectedComponents.runCounted(spark,
         vertices, edges, durable = Some((new graft.io.TableIO(spark, dir), 1)))
-      val resumedClusters = resumed.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(resumedClusters == freshClusters, s"killed after round $k")
+      assert(labelsOf(resumed) == freshClusters, s"killed after round $k")
       assert(itersTotal > k, "resumed run continues the loop counter")
       assert(itersTotal <= 14, s"resume must not replay from scratch: $itersTotal")
       // completion cleans up the scratch snapshots
@@ -91,14 +104,11 @@ class ConnectedComponentsSpec extends AnyFunSuite {
 
   test("stale snapshots (lineage-token mismatch) are discarded, not resumed") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-lin").toString
-    val io = new graft.io.TableIO(spark, dir)
+    val io = new graft.io.TableIO(spark, tempDir("graft-cc-lin"))
 
     // first run against graph A: one big path; killed mid-loop so a
     // committed round-4 snapshot (stamped "graph-A") remains on disk
-    val n = 512L
-    val verticesA = (0L until n).toDF("file_id")
-    val edgesA = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+    val (verticesA, edgesA) = spreadPath(512L)
     ConnectedComponents.runCounted(spark, verticesA, edgesA,
       maxIterations = 4, durable = Some((io, 2)), lineageToken = "graph-A")
     assert(io.isCommitted("cc_round_4"))
@@ -178,20 +188,16 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("a materialized call leaves at most its result persisted") {
-    import spark.implicits._
-    val n = 512L
-    val vertices = (0L until n).toDF("file_id")
-    val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+    val (vertices, edges) = spreadPath(512L)
     val sc = spark.sparkContext
-    val io = new graft.io.TableIO(spark,
-      java.nio.file.Files.createTempDirectory("graft-cc-leak").toString)
+    val io = new graft.io.TableIO(spark, tempDir("graft-cc-leak"))
     // plain, and with durable snapshots replacing some rounds' checkpoints
     Seq(None, Some((io, 2))).foreach { durable =>
       val before = sc.getPersistentRDDs.keySet
       val (labels, rounds) =
         ConnectedComponents.runCounted(spark, vertices, edges, durable = durable)
       assert(labels.collect().map(_.getLong(1)).toSet === Set(0L))
-      val left = sc.getPersistentRDDs.keySet -- before
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
       assert(rounds > 2)
       assert(left.size <= 1,
         s"$rounds rounds (durable = ${durable.isDefined}) left ${left.size} RDDs persisted")
@@ -199,15 +205,51 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   test("pointer jumping converges in O(log diameter) rounds") {
-    import spark.implicits._
     // 512-vertex path: plain propagation would need ~512 rounds
-    val n = 512L
-    val (labels, rounds) = ConnectedComponents.runCounted(
-      spark,
-      (0L until n).toDF("file_id"),
-      (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst"))
+    val (vertices, edges) = spreadPath(512L)
+    val (labels, rounds) = ConnectedComponents.runCounted(spark, vertices, edges)
     assert(labels.collect().map(_.getLong(1)).toSet === Set(0L))
     // log2(512) = 9; propagation + halving + the final no-change round
     assert(rounds <= 14, s"expected O(log d) rounds, got $rounds")
+  }
+
+  test("durable snapshots: a resume over differently partitioned edges matches a fresh run") {
+    import spark.implicits._
+    // the star forest depends on the edges' partitioning, so a resume must
+    // not trust the killed call's frontier. The path 0 - 2 - 3 - 1 with one
+    // edge per partition contracts to itself; after round 1 its labels are
+    // 0, 1, 0, 1 for 0, 1, 2, 3 and only 2 and 3 changed. The same edges in
+    // one partition contract to a star at 0, over which that frontier
+    // reaches neither 1 nor 3.
+    val path = Seq((0L, 2L), (2L, 3L), (3L, 1L))
+    val small = ((0L to 3L).toDF("file_id"),
+      spark.sparkContext.parallelize(path, path.size).toDF("src", "dst"))
+    Seq((small, 1, (e: DataFrame) => e.coalesce(1)),
+      (spreadPath(512L), 4, (e: DataFrame) => e.repartition(7))).foreach {
+      case ((vertices, edges), k, repartitioned) =>
+        val (fresh, freshRounds) = ConnectedComponents.runCounted(spark, vertices, edges)
+        assert(freshRounds > k + 1, s"round $k must be mid-loop: $freshRounds rounds")
+        val dir = tempDir("graft-cc-repart")
+        val killed = new graft.io.TableIO(spark, dir)
+        ConnectedComponents.runCounted(spark, vertices, edges,
+          maxIterations = k, durable = Some((killed, 1)))
+        assert(killed.isCommitted(s"cc_round_$k"), s"round-$k snapshot must be committed")
+        val (resumed, total) = ConnectedComponents.runCounted(spark, vertices,
+          repartitioned(edges), durable = Some((new graft.io.TableIO(spark, dir), 1)))
+        assert(labelsOf(resumed) == labelsOf(fresh), s"killed after round $k")
+        assert(total > k, s"killed after round $k: the resume must continue the loop")
+    }
+  }
+
+  test("q_cc_resume: two calls leave at most their results persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val results = (1 to 2).map { _ =>
+      val out = graft.SparkEntry.queries("q_cc_resume")(spark, "")
+      assert(out.count() > 0)
+      out
+    }
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.size <= results.size, s"two calls left ${left.size} RDDs persisted")
   }
 }

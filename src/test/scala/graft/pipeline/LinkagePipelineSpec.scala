@@ -1,12 +1,10 @@
 package graft.pipeline
 
-import java.nio.file.Files
-
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 import graft.io.TableIO
 
 /** End-to-end pipeline correctness: blocking co-location of labeled
@@ -14,11 +12,8 @@ import graft.io.TableIO
   * (BASELINE.md) at identical blocking keys, sha256 invariant, cluster
   * cohesion, and checkpoint resume.
   */
-class LinkagePipelineSpec extends AnyFunSuite {
+class LinkagePipelineSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
-
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   test("every labeled positive pair shares at least one blocking key") {
     import spark.implicits._
@@ -96,7 +91,7 @@ class LinkagePipelineSpec extends AnyFunSuite {
   test("pipeline end-to-end: cluster cohesion + sha invariant") {
     import spark.implicits._
     val files = RepoFiles.generate(spark, nFiles = 2000, seed = 42L)
-    val io = new TableIO(spark, tmpDir("graft-pipe"))
+    val io = new TableIO(spark, tempDir("graft-pipe"))
     val pipeline = new LinkagePipeline(spark, io)
     val resolved = pipeline.run(files).cache()
 
@@ -183,7 +178,7 @@ class LinkagePipelineSpec extends AnyFunSuite {
     def run(): (Seq[(Long, Long)], Long) = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val clusters = new LinkagePipeline(spark, new TableIO(spark,
-        tmpDir("graft-codegen"))).run(files)
+        tempDir("graft-codegen"))).run(files)
         .select("file_id", "cluster_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
       (clusters, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
@@ -203,14 +198,14 @@ class LinkagePipelineSpec extends AnyFunSuite {
       new LinkagePipeline.Stages(spark, files, policy).clusters
         .select("file_id", "cluster_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val durable = clusters(Durable(new TableIO(spark, tmpDir("graft-policy"))))
+    val durable = clusters(Durable(new TableIO(spark, tempDir("graft-policy"))))
     val inMemory = clusters(InMemory(2000))
     assert(durable.size == 2000)
     assert(inMemory == durable)
   }
 
   test("reading edges on a durable run commits edges, not clusters") {
-    val io = new TableIO(spark, tmpDir("graft-edges"))
+    val io = new TableIO(spark, tempDir("graft-edges"))
     val files = RepoFiles.generate(spark, nFiles = 200, seed = 7L)
     val stages =
       new LinkagePipeline.Stages(spark, files, LinkagePipeline.Durable(io))
@@ -222,7 +217,7 @@ class LinkagePipelineSpec extends AnyFunSuite {
   }
 
   test("resume: second run reuses committed checkpoints") {
-    val dir = tmpDir("graft-resume")
+    val dir = tempDir("graft-resume")
     val files = RepoFiles.generate(spark, nFiles = 200, seed = 7L)
     val io1 = new TableIO(spark, dir)
     val count1 = new LinkagePipeline(spark, io1).run(files).count()

@@ -3,13 +3,13 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 
 /** Streaming exact dedup: duplicates within and across micro-batches are
   * dropped; formatting variants collapse to one row (same fingerprint as
   * the batch op).
   */
-class StreamingDedupSpec extends AnyFunSuite {
+class StreamingDedupSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
 
   test("duplicates within and across micro-batches are dropped") {
@@ -114,8 +114,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     val base = "the quick brown fox jumps over the lazy dog and runs far " +
       "away into the deep green forest while nobody watches it"
     val near = base.replace("quick", "fast")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-stream-ckpt").toString
+    val ckpt = tempDir("graft-stream-ckpt")
     val input = MemoryStream[(Long, String)]
     // the memory sink is not fault-tolerant (no checkpoint recovery), so
     // the recoverable foreachBatch sink collects the links instead;
