@@ -573,12 +573,26 @@ object SparkEntry {
       Seq("doc_id", "n_bpe_tokens", "first_token", "last_token"), rows)
   }
 
+  /** The in-memory chain's clusters of `files`. The closure has run when
+    * `clusters` returns, and its result reads only its own labels, so the
+    * tokenize checkpoint (which the tokens stage reads) and the keys
+    * checkpoint (which the edges read; it cuts the tokens from their plan)
+    * are released here instead of piling up in a long-lived session.
+    */
+  private def inMemoryClusters(spark: SparkSession, files: DataFrame,
+      fileCount: Long): DataFrame = {
+    val stages = new LinkagePipeline.Stages(spark, files, InMemory(fileCount))
+    val clusters = stages.clusters
+    Seq(stages.tokens, stages.edges).foreach(graft.pipeline.ConnectedComponents.release)
+    clusters
+  }
+
   /** Flagship: the record-linkage pipeline end-to-end on a synthesized
     * repo-file table (north rule shape); driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame = {
     val files = RepoFiles.generate(spark, nFiles = 500, seed = 42L)
-    new LinkagePipeline.Stages(spark, files, InMemory(500)).clusters
+    inMemoryClusters(spark, files, 500)
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
   }
@@ -1011,7 +1025,7 @@ object SparkEntry {
     "q_linkage_clusters" -> ((s, dir) => {
       val files = RepoFiles.generate(s, nFiles = 1000, seed = 42L,
         partitions = genParts(s, 1000))
-      new LinkagePipeline.Stages(s, files, InMemory(1000)).clusters
+      inMemoryClusters(s, files, 1000)
         .join(files.select("file_id", "entity_id"), "file_id")
         .groupBy("cluster_id")
         .agg(count(lit(1)).as("cluster_size"),

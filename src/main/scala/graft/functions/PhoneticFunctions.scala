@@ -7,8 +7,11 @@ import graft.phonetic._
 
 /** Static UTF8String-level entry points for the phonetic Catalyst
   * expressions. Generated code calls these directly (the object compiles to
-  * static forwarders), keeping the expressions inside whole-stage codegen
-  * without per-row boxing beyond UTF8String <-> String.
+  * static forwarders), keeping the expressions inside whole-stage codegen.
+  * A row costs one UTF8String -> String conversion per input and one
+  * String -> UTF8String per output, plus the output array or struct of the
+  * array- and struct-valued functions; encoders are resolved once per
+  * length or option set, never built per row.
   */
 object PhoneticFunctions {
 
@@ -43,16 +46,30 @@ object PhoneticFunctions {
   def refinedSoundex(u: UTF8String): UTF8String =
     out(RefinedSoundex.default.encode(u.toString))
 
-  def metaphone(u: UTF8String, maxLen: Int): UTF8String = {
-    val m = if (maxLen <= 0) Metaphone.unbounded else Metaphone(Some(maxLen))
-    out(m.encode(u.toString))
-  }
+  /** Encoders for the non-default lengths in a plan, one per length (the
+    * length is a plan-time literal).
+    */
+  private val metaphones =
+    new java.util.concurrent.ConcurrentHashMap[Integer, Metaphone]()
+  private val doubleMetaphones =
+    new java.util.concurrent.ConcurrentHashMap[Integer, DoubleMetaphone]()
+  private val phonexes =
+    new java.util.concurrent.ConcurrentHashMap[Integer, Phonex]()
+
+  private def metaphoneOf(maxLen: Int): Metaphone =
+    if (maxLen <= 0) Metaphone.unbounded
+    else if (maxLen == 4) Metaphone.default
+    else metaphones.computeIfAbsent(maxLen, l => Metaphone(Some(l.intValue)))
+
+  def metaphone(u: UTF8String, maxLen: Int): UTF8String =
+    out(metaphoneOf(maxLen).encode(u.toString))
 
   def doubleMetaphone(u: UTF8String, maxLen: Int): ArrayData = {
     val dm =
       if (maxLen <= 0) DoubleMetaphone.unbounded
       else if (maxLen == 4) DoubleMetaphone.default
-      else DoubleMetaphone(Some(maxLen))
+      else doubleMetaphones.computeIfAbsent(maxLen,
+        l => DoubleMetaphone(Some(l.intValue)))
     val r = dm.doubleMetaphone(u.toString)
     new GenericArrayData(Array[Any](out(r.primary), out(r.alternate)))
   }
@@ -66,8 +83,12 @@ object PhoneticFunctions {
   def nysiis(u: UTF8String, strict: Boolean): UTF8String =
     out((if (strict) Nysiis.default else Nysiis.nonStrict).encode(u.toString))
 
-  def phonex(u: UTF8String, maxLen: Int): UTF8String =
-    out((if (maxLen == 4) Phonex.default else Phonex(maxLen)).encode(u.toString))
+  def phonex(u: UTF8String, maxLen: Int): UTF8String = {
+    val px =
+      if (maxLen == 4) Phonex.default
+      else phonexes.computeIfAbsent(maxLen, l => Phonex(l.intValue))
+    out(px.encode(u.toString))
+  }
 
   def cologne(u: UTF8String): UTF8String = out(Cologne.encode(u.toString))
 
@@ -87,8 +108,11 @@ object PhoneticFunctions {
     MatchRatingApproach.rating(a.toString, b.toString)
 
   def dmSoundex(u: UTF8String): ArrayData = {
-    val codes = DaitchMokotoff.default.innerSoundex(u.toString, branching = true)
-    new GenericArrayData(codes.map(c => out(c): Any).toArray)
+    val codes = DaitchMokotoff.default.codes(u.toString, branching = true)
+    val arr = new Array[Any](codes.length)
+    var i = 0
+    while (i < codes.length) { arr(i) = out(codes(i)); i += 1 }
+    new GenericArrayData(arr)
   }
 
   def dmEncode(u: UTF8String): UTF8String =
@@ -105,7 +129,7 @@ object PhoneticFunctions {
 
   /** All pairwise scoring features in ONE pass — strings converted once,
     * MRA encodes shared between rating and match decision, Levenshtein on
-    * raw UTF8Strings. Returns struct(jaro_winkler, lev, mra_match,
+    * the raw UTF8Strings' characters ([[Levenshtein]], equal to Spark's). Returns struct(jaro_winkler, lev, mra_match,
     * mra_rating, metaphone_eq, soundex_diff); whole-stage codegen's
     * subexpression elimination keeps it evaluated once per row even when
     * all six fields are projected.
@@ -114,7 +138,7 @@ object PhoneticFunctions {
     val a = ua.toString
     val b = ub.toString
     val jw = JaroWinkler.similarity(a, b)
-    val lev = ua.levenshteinDistance(ub)
+    val lev = Levenshtein.distance(ua, ub)
     val (mraRating, mraMatch) = MatchRatingApproach.ratingAndMatch(a, b)
     // unbounded codes: 4-char truncation collides far too often to be a
     // transitive-closure edge (distinct long names sharing a code prefix)
@@ -146,8 +170,11 @@ object PhoneticFunctions {
       concat: Boolean, maxPhonemes: Int): ArrayData = {
     val raw = bmEngine(nameType.toString, ruleType.toString, concat, maxPhonemes)
       .encode(u.toString)
-    new GenericArrayData(
-      bm.BeiderMorse.splitCodes(raw).map(c => out(c): Any))
+    val codes = bm.BeiderMorse.splitCodes(raw)
+    val arr = new Array[Any](codes.length)
+    var i = 0
+    while (i < codes.length) { arr(i) = out(codes(i)); i += 1 }
+    new GenericArrayData(arr)
   }
 
   /** Language guessing as a queryable column

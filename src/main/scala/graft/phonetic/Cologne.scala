@@ -14,12 +14,20 @@ object Cologne extends PhoneticEncoder {
 
   private def in(set: String, c: Char): Boolean = set.indexOf(c.toInt) >= 0
 
+  /** The char at `i` uppercased, with Ä/Ü/Ö folded, read in place: `tmp`
+    * is either ASCII or already uppercased.
+    */
+  private def folded(tmp: String, i: Int): Char = {
+    val c = tmp.charAt(i)
+    if (c >= 'a' && c <= 'z') (c - 32).toChar
+    else if (c == 'Ä') 'A'
+    else if (c == 'Ü') 'U'
+    else if (c == 'Ö') 'O'
+    else c
+  }
+
   override def encode(s: String): String = {
-    val tmp = s
-      .toUpperCase(java.util.Locale.ROOT)
-      .replace('Ä', 'A')
-      .replace('Ü', 'U')
-      .replace('Ö', 'O')
+    val tmp = if (CaseFold.isAscii(s)) s else s.toUpperCase(java.util.Locale.ROOT)
 
     val buffer = new java.lang.StringBuilder(tmp.length)
     // last char pushed to the output (dedup state, ref: cologne.rs:32-52)
@@ -33,10 +41,10 @@ object Cologne extends PhoneticEncoder {
     var lastChar = Ignore
     var i = 0
     while (i < tmp.length) {
-      val ch = tmp.charAt(i)
+      val ch = folded(tmp, i)
       if (ch >= 'A' && ch <= 'Z') {
         // next char is the raw following char, unfiltered (may be space etc.)
-        val nextChar = if (i + 1 < tmp.length) tmp.charAt(i + 1) else Ignore
+        val nextChar = if (i + 1 < tmp.length) folded(tmp, i + 1) else Ignore
 
         if (in("AEIJOUY", ch)) push('0')
         else if (ch == 'B' || (ch == 'P' && nextChar != 'H')) push('1')

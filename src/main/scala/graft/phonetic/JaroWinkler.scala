@@ -8,6 +8,9 @@ package graft.phonetic
   */
 object JaroWinkler {
 
+  private final class Workspace { var matched = new Array[Boolean](64) }
+  private val workspace = ThreadLocal.withInitial(() => new Workspace)
+
   /** Jaro similarity in [0, 1]. */
   def jaro(s1: String, s2: String): Double = {
     if (s1.isEmpty && s2.isEmpty) return 1.0
@@ -18,8 +21,13 @@ object JaroWinkler {
     val len2 = s2.length
     val matchDistance = math.max(len1, len2) / 2 - 1
 
-    val matched1 = new Array[Boolean](len1)
-    val matched2 = new Array[Boolean](len2)
+    // one reused per-thread array: s1's match flags at [0, len1), s2's
+    // at [len1, len1 + len2)
+    val ws = workspace.get()
+    if (ws.matched.length < len1 + len2)
+      ws.matched = new Array[Boolean](math.max(len1 + len2, 2 * ws.matched.length))
+    val matched = ws.matched
+    java.util.Arrays.fill(matched, 0, len1 + len2, false)
     var matches = 0
     var i = 0
     while (i < len1) {
@@ -28,9 +36,9 @@ object JaroWinkler {
       var j = lo
       var found = false
       while (j <= hi && !found) {
-        if (!matched2(j) && s1.charAt(i) == s2.charAt(j)) {
-          matched1(i) = true
-          matched2(j) = true
+        if (!matched(len1 + j) && s1.charAt(i) == s2.charAt(j)) {
+          matched(i) = true
+          matched(len1 + j) = true
           matches += 1
           found = true
         }
@@ -44,8 +52,8 @@ object JaroWinkler {
     var k = 0
     i = 0
     while (i < len1) {
-      if (matched1(i)) {
-        while (!matched2(k)) k += 1
+      if (matched(i)) {
+        while (!matched(len1 + k)) k += 1
         if (s1.charAt(i) != s2.charAt(k)) transpositions += 1
         k += 1
       }

@@ -32,15 +32,48 @@ object MatchRatingApproach extends PhoneticEncoder {
     if (i >= 0) PlainAscii.charAt(i) else c
   }
 
-  private[phonetic] def cleanName(value: String): String = {
-    val up = value.toUpperCase(java.util.Locale.ROOT)
-    val sb = new java.lang.StringBuilder(up.length)
+  /** Code points of `value`, uppercased as `toUpperCase(Locale.ROOT)`
+    * would, with `-&'.,` and whitespace dropped and accents folded; each
+    * cleaned char is appended to `out`, or with `dropVowels` only those
+    * that `removeVowels` keeps at their index in the cleaned sequence.
+    * ASCII takes no case-mapping call; other code points go through
+    * [[CaseFold.appendUpper]], whose output may be longer (ß → SS).
+    */
+  private def cleanInto(value: String, scratch: java.lang.StringBuilder,
+      out: java.lang.StringBuilder, dropVowels: Boolean): Unit = {
+    var n = 0
     var i = 0
-    while (i < up.length) {
-      val c = up.charAt(i)
-      if (!isTrimChar(c) && !Character.isWhitespace(c)) sb.append(foldAccent(c))
-      i += 1
+    while (i < value.length) {
+      val c = value.charAt(i)
+      if (c < 0x80) {
+        val u = if (c >= 'a' && c <= 'z') (c - 32).toChar else c
+        if (!isTrimChar(u) && !Character.isWhitespace(u)) {
+          if (!dropVowels || keptByRemoveVowels(u, n)) out.append(u)
+          n += 1
+        }
+        i += 1
+      } else {
+        val cp = value.codePointAt(i)
+        scratch.setLength(0)
+        CaseFold.appendUpper(scratch, cp)
+        var k = 0
+        while (k < scratch.length) {
+          val u = scratch.charAt(k)
+          if (!isTrimChar(u) && !Character.isWhitespace(u)) {
+            val f = foldAccent(u)
+            if (!dropVowels || keptByRemoveVowels(f, n)) out.append(f)
+            n += 1
+          }
+          k += 1
+        }
+        i += Character.charCount(cp)
+      }
     }
+  }
+
+  private[phonetic] def cleanName(value: String): String = {
+    val sb = new java.lang.StringBuilder(value.length)
+    cleanInto(value, new java.lang.StringBuilder(4), sb, dropVowels = false)
     sb.toString
   }
 
@@ -49,37 +82,51 @@ object MatchRatingApproach extends PhoneticEncoder {
     lc == 'a' || lc == 'e' || lc == 'i' || lc == 'o' || lc == 'u'
   }
 
+  /** `removeVowels` keeps the char at index `i` of its input. */
+  @inline private def keptByRemoveVowels(c: Char, i: Int): Boolean =
+    (i == 0 || !isVowel(c)) && !isTrimChar(c) && !Character.isWhitespace(c)
+
   private[phonetic] def removeVowels(value: String): String = {
     val sb = new java.lang.StringBuilder(value.length)
     var i = 0
     while (i < value.length) {
       val c = value.charAt(i)
-      if ((i == 0 || !isVowel(c)) && !isTrimChar(c) &&
-          !Character.isWhitespace(c)) sb.append(c)
+      if (keptByRemoveVowels(c, i)) sb.append(c)
       i += 1
     }
     sb.toString
   }
 
-  private[phonetic] def removeDoubleConsonants(value: String): String = {
-    val up = value.toUpperCase(java.util.Locale.ROOT)
-    val sb = new java.lang.StringBuilder(up.length)
+  /** Uppercases `in` (as `toUpperCase(Locale.ROOT)`) into `up`, then
+    * writes it to `out` with every run of an identical non-vowel A-Z
+    * letter collapsed pairwise: the 21 consonant pairs of
+    * match_rating_approach.rs:42-64, where the reference's repeated
+    * `String::replace("XX","X")` is non-overlapping, so "BBB" -> "BB".
+    */
+  private def collapseDoubles(in: java.lang.StringBuilder,
+      up: java.lang.StringBuilder, out: java.lang.StringBuilder): Unit = {
+    up.setLength(0)
     var i = 0
+    while (i < in.length) {
+      val cp = Character.codePointAt(in, i)
+      CaseFold.appendUpper(up, cp)
+      i += Character.charCount(cp)
+    }
+    out.setLength(0)
+    i = 0
     while (i < up.length) {
       val c = up.charAt(i)
-      // Collapse any run of an identical non-vowel A-Z letter (the 21
-      // consonant pairs of match_rating_approach.rs:42-64; repeated
-      // String.replace there collapses runs the same way).
+      out.append(c)
       if (c >= 'A' && c <= 'Z' && !isVowel(c) && i + 1 < up.length &&
-          up.charAt(i + 1) == c) {
-        // Non-overlapping pair replace, like the repeated
-        // `String::replace("XX","X")` of the reference: "BBB" -> "BB".
-        sb.append(c)
-        i += 1
-      } else sb.append(c)
+          up.charAt(i + 1) == c) i += 1
       i += 1
     }
-    sb.toString
+  }
+
+  private[phonetic] def removeDoubleConsonants(value: String): String = {
+    val out = new java.lang.StringBuilder(value.length)
+    collapseDoubles(new java.lang.StringBuilder(value), new java.lang.StringBuilder, out)
+    out.toString
   }
 
   private[phonetic] def firstThreeLastThree(value: String): String =
@@ -128,10 +175,33 @@ object MatchRatingApproach extends PhoneticEncoder {
     t.length == 1 && t.charAt(0) < 0x80
   }
 
+  /** Per-thread builders for [[encode]]: the case-mapping scratch, the
+    * cleaned name without vowels, its uppercase, and the code.
+    */
+  private final class Workspace {
+    val scratch = new java.lang.StringBuilder(4)
+    val kept = new java.lang.StringBuilder(32)
+    val up = new java.lang.StringBuilder(32)
+    val code = new java.lang.StringBuilder(32)
+  }
+  private val workspace = ThreadLocal.withInitial(() => new Workspace)
+
+  /** `firstThreeLastThree(removeDoubleConsonants(removeVowels(cleanName(value))))`
+    * in one pass over `value` and one over the kept chars, on reused
+    * builders: the only allocation is the code itself.
+    */
   override def encode(value: String): String = {
     val t = value.trim
     if (t.isEmpty || trimmedLenIsOne(value)) return ""
-    firstThreeLastThree(removeDoubleConsonants(removeVowels(cleanName(value))))
+    val ws = workspace.get()
+    val kept = ws.kept
+    kept.setLength(0)
+    cleanInto(value, ws.scratch, kept, dropVowels = true)
+    val code = ws.code
+    collapseDoubles(kept, ws.up, code)
+    // firstThreeLastThree
+    if (code.length > 6) code.delete(3, code.length - 3)
+    code.toString
   }
 
   override def isEncodedEquals(first: String, second: String): Boolean = {

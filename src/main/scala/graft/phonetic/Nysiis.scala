@@ -39,14 +39,7 @@ final case class Nysiis(strict: Boolean) extends PhoneticEncoder {
 
     var index = 1
     while (index < len) {
-      val next = if (index + 1 < len) Some(chars(index + 1)) else None
-      val nextNext = if (index + 2 < len) Some(chars(index + 2)) else None
-      val transcoded = transcode(chars(index - 1), chars(index), next, nextNext)
-      var i = 0
-      while (i < transcoded.length) {
-        chars(index + i) = transcoded.charAt(i)
-        i += 1
-      }
+      transcodeInPlace(chars, index)
       if (chars(index - 1) != chars(index)) key.append(chars(index))
       index += 1
     }
@@ -68,6 +61,11 @@ final case class Nysiis(strict: Boolean) extends PhoneticEncoder {
 object Nysiis {
   private val TrueLength = 6
 
+  /** No char: a position past the end (a cleaned input never holds
+    * U+FFFF).
+    */
+  private val NoChar = '\uffff'
+
   val default: Nysiis = Nysiis(strict = true)
   val nonStrict: Nysiis = Nysiis(strict = false)
 
@@ -76,26 +74,31 @@ object Nysiis {
     lc == 'a' || lc == 'e' || lc == 'i' || lc == 'o' || lc == 'u'
   }
 
-  /** ref: nysiis.rs:80-120 */
-  private def transcode(
-      previous: Char,
-      current: Char,
-      next: Option[Char],
-      nextNext: Option[Char]): String = {
-    if (current == 'E' && next.contains('V')) return "AF"
-    if (isVowel(current)) return "A"
-    current match {
-      case 'Q' => return "G"
-      case 'Z' => return "S"
-      case 'M' => return "N"
-      case 'K' => return if (next.contains('N')) "NN" else "C"
-      case _   =>
+  /** Writes the transcoding of `chars(index)` over `chars` from `index`
+    * (ref: nysiis.rs:80-120): its previous char, next char and the one
+    * after decide it, and a multi-char result (AF, NN, SSS, FF) overwrites
+    * the chars that follow.
+    */
+  private def transcodeInPlace(chars: Array[Char], index: Int): Unit = {
+    val previous = chars(index - 1)
+    val current = chars(index)
+    val len = chars.length
+    val next = if (index + 1 < len) chars(index + 1) else NoChar
+    val nextNext = if (index + 2 < len) chars(index + 2) else NoChar
+    def put(s: String): Unit = s.getChars(0, s.length, chars, index)
+    if (current == 'E' && next == 'V') put("AF")
+    else if (isVowel(current)) chars(index) = 'A'
+    else current match {
+      case 'Q' => chars(index) = 'G'
+      case 'Z' => chars(index) = 'S'
+      case 'M' => chars(index) = 'N'
+      case 'K' => if (next == 'N') put("NN") else chars(index) = 'C'
+      case _ =>
+        if (current == 'S' && next == 'C' && nextNext == 'H') put("SSS")
+        else if (current == 'P' && next == 'H') put("FF")
+        else if ((current == 'H' && (!isVowel(previous) ||
+            next == NoChar || !isVowel(next))) ||
+            (current == 'W' && isVowel(previous))) chars(index) = previous
     }
-    if (current == 'S' && next.contains('C') && nextNext.contains('H'))
-      return "SSS"
-    if (current == 'P' && next.contains('H')) return "FF"
-    if ((current == 'H' && (!isVowel(previous) || !next.exists(isVowel))) ||
-        (current == 'W' && isVowel(previous))) previous.toString
-    else current.toString
   }
 }

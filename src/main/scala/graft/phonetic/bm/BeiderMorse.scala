@@ -1,7 +1,6 @@
 package graft.phonetic.bm
 
 import java.util.Locale
-import java.util.regex.Pattern
 
 import scala.collection.immutable.SortedSet
 import scala.collection.mutable
@@ -210,19 +209,13 @@ private[bm] final class CodePoints private (var cps: Array[Int],
     }
     this
   }
-
-  def substring(from: Int, until: Int): String = {
-    val sb = new java.lang.StringBuilder(until - from)
-    var i = from
-    while (i < until) { sb.appendCodePoint(cps(i)); i += 1 }
-    sb.toString
-  }
 }
 
 /** Context matcher over a code-point range. The eight literal fast paths
   * mirror the reference's `OptimizedRegex`
-  * (ref: src/beider_morse/regex_optim.rs:9-158); anything else falls back
-  * to `java.util.regex` with `find()` semantics (Rust `Regex::is_match`).
+  * (ref: src/beider_morse/regex_optim.rs:9-158); anything else is a
+  * [[CpSequence]] with `java.util.regex`'s `find()` semantics (Rust
+  * `Regex::is_match`).
   */
 private[bm] sealed trait ContextMatcher {
   def matches(input: CodePoints, from: Int, until: Int): Boolean
@@ -271,16 +264,16 @@ private[bm] object ContextMatcher {
     def matches(input: CodePoints, from: Int, until: Int): Boolean =
       until - from >= 1 && (list.indexOf(input.cps(until - 1)) >= 0) == shouldMatch
   }
-  final case class RegexMatcher(pattern: Pattern) extends ContextMatcher {
+  final case class Sequence(seq: CpSequence) extends ContextMatcher {
     def matches(input: CodePoints, from: Int, until: Int): Boolean =
-      pattern.matcher(input.substring(from, until)).find()
+      seq.find(input.cps, from, until)
   }
 
   private def cpsOf(s: String): Array[Int] = s.codePoints().toArray
 
   /** The literal fast-path classifier
     * (ref: src/beider_morse/regex_optim.rs:98-158); None falls back to
-    * a compiled regex.
+    * a [[CpSequence]].
     */
   def optimize(regex: String): Option[ContextMatcher] = {
     val startsWith = regex.startsWith("^")
@@ -319,14 +312,109 @@ private[bm] object ContextMatcher {
   }
 
   def compile(regex: String): ContextMatcher =
-    optimize(regex).getOrElse(RegexMatcher(Pattern.compile(regex)))
+    optimize(regex).getOrElse(Sequence(CpSequence.parse(regex)))
+}
+
+/** A regex of the rule files that is not a literal fast path: an optional
+  * `^`, then literals and `[...]` / `[^...]` classes of one code point
+  * each, then an optional `$` (10 rule contexts and 31 language rules are
+  * of this shape). `find` gives `java.util.regex.Matcher.find()`'s answer
+  * on the code points `[from, until)`, whose `$` also matches before a
+  * final line terminator.
+  */
+private[bm] final class CpSequence(members: Array[String],
+    negated: Array[Boolean], anchoredStart: Boolean, anchoredEnd: Boolean) {
+  private val k = members.length
+  // the code point of each literal element, -1 for a class
+  private val literal = Array.tabulate(k)(e =>
+    if (!negated(e) && members(e).codePointCount(0, members(e).length) == 1)
+      members(e).codePointAt(0) else -1)
+
+  private def matchesAt(cps: Array[Int], start: Int): Boolean = {
+    var e = 0
+    while (e < k && {
+      val c = cps(start + e)
+      if (literal(e) >= 0) c == literal(e)
+      else (members(e).indexOf(c) >= 0) != negated(e)
+    }) e += 1
+    e == k
+  }
+
+  /** Whether `$` matches at `p` in `[from, until)`: at the end, before a
+    * final line terminator, or before a final CR LF (`Pattern`'s Dollar
+    * without MULTILINE or UNIX_LINES).
+    */
+  private def dollarAt(cps: Array[Int], from: Int, until: Int, p: Int): Boolean =
+    if (p == until) true
+    else if (p == until - 1) {
+      val c = cps(p)
+      if (c == '\n') !(p - 1 >= from && cps(p - 1) == '\r')
+      else c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
+    } else p == until - 2 && p >= from && cps(p) == '\r' && cps(p + 1) == '\n'
+
+  def find(cps: Array[Int], from: Int, until: Int): Boolean =
+    if (anchoredStart)
+      from + k <= until && matchesAt(cps, from) &&
+        (!anchoredEnd || dollarAt(cps, from, until, from + k))
+    else if (anchoredEnd) {
+      var p = until
+      var found = false
+      while (!found && p >= until - 2 && p - k >= from) {
+        found = dollarAt(cps, from, until, p) && matchesAt(cps, p - k)
+        p -= 1
+      }
+      found
+    } else {
+      var start = from
+      while (start + k <= until && !matchesAt(cps, start)) start += 1
+      start + k <= until
+    }
+}
+
+private[bm] object CpSequence {
+  private val Special = "\\[](){}|.*+?^$-"
+
+  /** Parses `regex`; a rule file with any other regex syntax fails to
+    * load.
+    */
+  def parse(regex: String): CpSequence = {
+    def unsupported = throw new IllegalStateException(s"unsupported BM regex: $regex")
+    val anchoredStart = regex.startsWith("^")
+    val anchoredEnd = regex.endsWith("$") && regex.length > (if (anchoredStart) 1 else 0)
+    val body = regex.substring(if (anchoredStart) 1 else 0,
+      regex.length - (if (anchoredEnd) 1 else 0))
+    val members = Array.newBuilder[String]
+    val negated = Array.newBuilder[Boolean]
+    var i = 0
+    while (i < body.length) {
+      if (body.charAt(i) == '[') {
+        val close = body.indexOf(']', i)
+        if (close < 0) unsupported
+        val neg = close > i + 1 && body.charAt(i + 1) == '^'
+        val set = body.substring(if (neg) i + 2 else i + 1, close)
+        if (set.isEmpty || set.exists(c => Special.indexOf(c) >= 0)) unsupported
+        members += set
+        negated += neg
+        i = close + 1
+      } else {
+        val cp = body.codePointAt(i)
+        if (Special.indexOf(cp) >= 0) unsupported
+        members += new String(Character.toChars(cp))
+        negated += false
+        i += Character.charCount(cp)
+      }
+    }
+    new CpSequence(members.result(), negated.result(), anchoredStart, anchoredEnd)
+  }
 }
 
 /** One replacement alternative of a rule: phoneme text plus the languages
   * it is valid for, as a [[LangBits]] mask
   * (ref: src/beider_morse/rule.rs:79-151).
   */
-private[bm] final case class BmPhoneme(text: String, langMask: Long)
+private[bm] final case class BmPhoneme(text: String, langMask: Long) {
+  val chars: Array[Char] = text.toCharArray
+}
 
 /** One rewrite rule: `pattern` at position, regex contexts on both sides,
   * alternatives applied as a set-product
@@ -336,9 +424,13 @@ private[bm] final class BmRule(
     val pattern: Array[Int],
     val leftContext: ContextMatcher,
     val rightContext: ContextMatcher,
-    val phonemes: IndexedSeq[BmPhoneme]) {
+    val phonemes: Array[BmPhoneme]) {
 
   def patternLength: Int = pattern.length
+
+  // most contexts are empty: skip their (megamorphic) matcher call
+  private val anyRight = rightContext == ContextMatcher.AllStrings
+  private val anyLeft = leftContext == ContextMatcher.AllStrings
 
   /** Pattern, then right context, then left context — the reference's
     * evaluation order (ref: src/beider_morse/rule.rs:371-385).
@@ -351,49 +443,69 @@ private[bm] final class BmRule(
       if (input.cps(index + i) != pattern(i)) return false
       i += 1
     }
-    rightContext.matches(input, ipl, input.length) &&
-      leftContext.matches(input, 0, index)
+    (anyRight || rightContext.matches(input, ipl, input.length)) &&
+      (anyLeft || leftContext.matches(input, 0, index))
   }
 }
 
 /** Rules for one (nameType, ruleType, language), bucketed by first pattern
   * code point; bucket order is file order (first match wins)
-  * (ref: src/beider_morse/rule.rs:214-304).
+  * (ref: src/beider_morse/rule.rs:214-304). The buckets sit in an array
+  * indexed by code point minus the smallest key, so a lookup is two
+  * compares and a load.
   */
-private[bm] final class RuleBuckets(val buckets: Map[Int, IndexedSeq[BmRule]]) {
-  def get(cp: Int): IndexedSeq[BmRule] =
-    buckets.getOrElse(cp, RuleBuckets.none)
-  def isEmpty: Boolean = buckets.isEmpty
+private[bm] final class RuleBuckets(buckets: Map[Int, scala.collection.Seq[BmRule]]) {
+  private val base = if (buckets.isEmpty) 0 else buckets.keys.min
+  private val table: Array[Array[BmRule]] = {
+    val t = Array.fill(if (buckets.isEmpty) 0 else buckets.keys.max - base + 1)(RuleBuckets.none)
+    buckets.foreach { case (cp, rules) => t(cp - base) = rules.toArray }
+    t
+  }
+  def get(cp: Int): Array[BmRule] = {
+    val i = cp - base
+    if (i >= 0 && i < table.length) table(i) else RuleBuckets.none
+  }
+  def isEmpty: Boolean = table.isEmpty
+
+  /** The first rule of `input(index)`'s bucket that matches there, or
+    * null.
+    */
+  def firstMatch(input: CodePoints, index: Int): BmRule = {
+    val bucket = get(input.cps(index))
+    var b = 0
+    while (b < bucket.length && !bucket(b).matches(input, index)) b += 1
+    if (b < bucket.length) bucket(b) else null
+  }
 }
 private[bm] object RuleBuckets {
-  private val none: IndexedSeq[BmRule] = IndexedSeq.empty
-  val empty = new RuleBuckets(Map.empty)
+  private val none: Array[BmRule] = Array.empty
 }
 
-/** Substring matcher for a language-guessing pattern. Most of the ~200
-  * rules per name type are literal fragments with optional `^`/`$` anchors
-  * (`ault$`, `^tz`, `eau`); matching them with `String.indexOf` instead of
-  * `java.util.regex` removes a Matcher allocation + regex scan per rule
-  * per encode. Semantics mirror `Regex::is_match` = find-anywhere.
+/** Matcher for a language-guessing pattern. Most of the ~200 rules per
+  * name type are literal fragments with optional `^`/`$` anchors (`ault$`,
+  * `^tz`, `eau`), matched with `String` methods on the lowercased name; the
+  * rest are [[CpSequence]]s over its code points. Semantics mirror
+  * `Regex::is_match` = find-anywhere.
   */
 private[bm] sealed trait LangMatcher {
-  def matches(input: String): Boolean
+  def matches(input: String, cps: CodePoints): Boolean
 }
 private[bm] object LangMatcher {
   final case class Contains(lit: String) extends LangMatcher {
-    def matches(input: String): Boolean = input.contains(lit)
+    def matches(input: String, cps: CodePoints): Boolean = input.contains(lit)
   }
   final case class Prefix(lit: String) extends LangMatcher {
-    def matches(input: String): Boolean = input.startsWith(lit)
+    def matches(input: String, cps: CodePoints): Boolean = input.startsWith(lit)
   }
   final case class Suffix(lit: String) extends LangMatcher {
-    def matches(input: String): Boolean = input.endsWith(lit)
+    def matches(input: String, cps: CodePoints): Boolean = input.endsWith(lit)
   }
   final case class Exact(lit: String) extends LangMatcher {
-    def matches(input: String): Boolean = input == lit
+    def matches(input: String, cps: CodePoints): Boolean = input == lit
   }
-  final case class Rx(pattern: Pattern) extends LangMatcher {
-    def matches(input: String): Boolean = pattern.matcher(input).find()
+  final case class Sequence(seq: CpSequence) extends LangMatcher {
+    def matches(input: String, cps: CodePoints): Boolean =
+      seq.find(cps.cps, 0, cps.length)
   }
 
   private def isLiteral(s: String): Boolean =
@@ -412,7 +524,7 @@ private[bm] object LangMatcher {
         case (false, true)  => Suffix(body)
         case (false, false) => Contains(body)
       }
-    } else Rx(Pattern.compile(pattern))
+    } else Sequence(CpSequence.parse(pattern))
   }
 }
 
@@ -424,7 +536,7 @@ private[bm] final case class LangRule(
   * (ref: src/beider_morse/lang.rs:36-64).
   */
 private[bm] final class BmLang(
-    allLanguages: SortedSet[String], rules: IndexedSeq[LangRule]) {
+    allLanguages: SortedSet[String], rules: Array[LangRule]) {
   private val allMask = LangBits.maskOf(allLanguages)
 
   /** Empty result maps to the any-language mask, mirroring the reference's
@@ -432,11 +544,12 @@ private[bm] final class BmLang(
     */
   def guessMask(input: String): Long = {
     val lower = input.toLowerCase(Locale.ROOT)
+    val cps = BeiderMorse.Workspace.tl.get().cpsLang.resetFromString(lower)
     var langs = allMask
     var i = 0
     while (i < rules.length) {
       val rule = rules(i)
-      if (rule.matcher.matches(lower)) {
+      if (rule.matcher.matches(lower, cps)) {
         langs =
           if (rule.acceptOnMatch) langs & rule.langMask
           else langs & ~rule.langMask
@@ -575,7 +688,7 @@ private[bm] object BmParser {
         val pattern = q(0).codePoints().toArray
         val left = ContextMatcher.compile(q(1) + "$")
         val right = ContextMatcher.compile("^" + q(2))
-        val phonemes = parsePhonemeExpr(q(3))
+        val phonemes = parsePhonemeExpr(q(3)).toArray
         val rule = new BmRule(pattern, left, right, phonemes)
         result.getOrElseUpdate(pattern(0), mutable.ArrayBuffer.empty) += rule
       } else if (line.startsWith("#include ")) {
@@ -588,10 +701,8 @@ private[bm] object BmParser {
     result
   }
 
-  def parseRules(name: String): RuleBuckets = {
-    val m = parseRuleFile(name)
-    new RuleBuckets(m.view.mapValues(_.toIndexedSeq).toMap)
-  }
+  def parseRules(name: String): RuleBuckets =
+    new RuleBuckets(parseRuleFile(name).toMap)
 
   /** `{nt}_lang.txt`: `pattern lang1+lang2 true|false` per line
     * (ref: src/beider_morse/lang.rs:93-151).
@@ -614,7 +725,7 @@ private[bm] object BmParser {
       LangRule(LangMatcher.compile(fields(0)),
         LangBits.maskOf(fields(1).split("\\+", -1).toSeq), accept)
     }
-    new BmLang(allLanguages, rules.toIndexedSeq)
+    new BmLang(allLanguages, rules.toArray)
   }
 
   /** `{nt}_languages.txt`: one language per line
@@ -673,11 +784,11 @@ private[bm] final class PhonemeSet(val arena: PhonemeArena,
   /** Stage `src[so, so+sl)` followed by `suffix` at the arena tip; returns
     * the staged length.
     */
-  def stage(src: Array[Char], so: Int, sl: Int, suffix: String): Int = {
+  def stage(src: Array[Char], so: Int, sl: Int, suffix: Array[Char]): Int = {
     val n = sl + suffix.length
     arena.ensure(n)
     System.arraycopy(src, so, arena.chars, arena.len, sl)
-    suffix.getChars(0, suffix.length, arena.chars, arena.len + sl)
+    System.arraycopy(suffix, 0, arena.chars, arena.len + sl, suffix.length)
     n
   }
 
@@ -722,9 +833,13 @@ private[bm] final class PhonemeSet(val arena: PhonemeArena,
       lens = java.util.Arrays.copyOf(lens, size * 2)
       langs = java.util.Arrays.copyOf(langs, size * 2)
     }
-    System.arraycopy(offs, ip, offs, ip + 1, size - ip)
-    System.arraycopy(lens, ip, lens, ip + 1, size - ip)
-    System.arraycopy(langs, ip, langs, ip + 1, size - ip)
+    var k = size
+    while (k > ip) {
+      offs(k) = offs(k - 1)
+      lens(k) = lens(k - 1)
+      langs(k) = langs(k - 1)
+      k -= 1
+    }
     offs(ip) = off
     lens(ip) = n
     langs(ip) = lang
@@ -753,11 +868,8 @@ private[bm] final class PhonemeSet(val arena: PhonemeArena,
     }
   }
 
-  /** Convenience for String candidates (empty-seed / test paths). */
-  def insertIfAbsent(text: String, lang: Long): Unit = {
-    val n = stage(arena.chars, 0, 0, text)
-    commitStagedIfAbsent(n, lang)
-  }
+  /** Inserts the empty phoneme (the seed of a pass). */
+  def insertEmpty(lang: Long): Unit = commitStagedIfAbsent(0, lang)
 
   def makeString: String = {
     if (size == 0) return ""
@@ -782,6 +894,22 @@ private[bm] object PhonemeSet {
     */
   def compareRange(a: Array[Char], ao: Int, al: Int,
       b: Array[Char], bo: Int, bl: Int): Int = {
+    val k = java.util.Arrays.mismatch(a, ao, ao + al, b, bo, bo + bl)
+    if (k < 0) 0
+    else if (k == al || k == bl) Integer.compare(al, bl)
+    else {
+      val x = a(ao + k)
+      val y = b(bo + k)
+      // outside surrogates, and not after a high one, a char is its code
+      // point
+      if (!Character.isSurrogate(x) && !Character.isSurrogate(y) &&
+          (k == 0 || !Character.isHighSurrogate(a(ao + k - 1)))) x - y
+      else compareCodePoints(a, ao, al, b, bo, bl)
+    }
+  }
+
+  private def compareCodePoints(a: Array[Char], ao: Int, al: Int,
+      b: Array[Char], bo: Int, bl: Int): Int = {
     var i = ao
     var j = bo
     val aEnd = ao + al
@@ -795,6 +923,8 @@ private[bm] object PhonemeSet {
     }
     Integer.compare(aEnd - i, bEnd - j)
   }
+
+  val NoChars: Array[Char] = Array.empty
 }
 
 /** All parsed BM configuration, loaded once per JVM from classpath
@@ -840,9 +970,24 @@ final class BeiderMorse(
 
   private val lang = config.langs(nameType)
 
+  private val finalRulesCommon = config.rulesFor(nameType, ruleType.code, "common")
+
+  /** Main-pass and language-specific final rules per language name,
+    * resolved once per language instead of per encode.
+    */
+  private val rulesByLang =
+    new java.util.concurrent.ConcurrentHashMap[String, (RuleBuckets, RuleBuckets)]()
+
+  private def rulesOf(l: String): (RuleBuckets, RuleBuckets) =
+    rulesByLang.computeIfAbsent(l, l =>
+      (config.rulesFor(nameType, "rules", l), config.rulesFor(nameType, ruleType.code, l)))
+
+  /** Each name prefix with `prefix + " "`, in iteration order. */
+  private val prefixes = prefixesFor(nameType).toArray.map(p => (p, p + " "))
+
   /** `out` must be cleared and own a different arena than `in`. */
   private def applyRule(in: PhonemeSet,
-      alternatives: IndexedSeq[BmPhoneme], out: PhonemeSet): Unit = {
+      alternatives: Array[BmPhoneme], out: PhonemeSet): Unit = {
     val srcChars = in.arena.chars
     var i = 0
     var break = false
@@ -856,7 +1001,7 @@ final class BeiderMorse(
         val languages = leftLangs & right.langMask
         if (languages != 0L) {
           if (out.size < maxPhonemes) {
-            val n = out.stage(srcChars, so, sl, right.text)
+            val n = out.stage(srcChars, so, sl, right.chars)
             out.commitStagedIfAbsent(n, languages)
           }
           if (out.size >= maxPhonemes) break = true
@@ -900,37 +1045,24 @@ final class BeiderMorse(
       var sub = subA
       var spare = subB
       sub.clearAll()
-      sub.insertIfAbsent("", origLangs)
-      var i = 0
+      sub.insertEmpty(origLangs)
       val len = input.length
+      var i = 0
+      var matched = if (len > 0) finalRules.firstMatch(input, 0) else null
       while (i < len) {
-        val bucket = finalRules.get(input.cps(i))
-        var matched: BmRule = null
-        var b = 0
-        while (matched == null && b < bucket.length) {
-          if (bucket(b).matches(input, i)) matched = bucket(b)
-          b += 1
-        }
         if (matched != null) {
           spare.clearAll()
           applyRule(sub, matched.phonemes, spare)
           val t = sub; sub = spare; spare = t
           i += matched.patternLength
+          matched = if (i < len) finalRules.firstMatch(input, i) else null
         } else {
           // unmatched chars pass through in final-rule passes (only);
           // batch the whole unmatched run into one append — identical to
-          // per-char appends (append never interacts with the phoneme cap)
+          // per-char appends (append never interacts with the phoneme cap).
+          // The rule that ends the run is the next position's match.
           var j = i + 1
-          while (j < len && {
-            val bucket2 = finalRules.get(input.cps(j))
-            var any = false
-            var b2 = 0
-            while (!any && b2 < bucket2.length) {
-              if (bucket2(b2).matches(input, j)) any = true
-              b2 += 1
-            }
-            !any
-          }) j += 1
+          while (j < len && { matched = finalRules.firstMatch(input, j); matched == null }) j += 1
           spare.clearAll()
           appendRun(sub, input, i, j, spare)
           val t = sub; sub = spare; spare = t
@@ -940,7 +1072,7 @@ final class BeiderMorse(
       var s = 0
       val subChars = sub.arena.chars
       while (s < sub.size) {
-        val n = out.stage(subChars, sub.textOff(s), sub.textLen(s), "")
+        val n = out.stage(subChars, sub.textOff(s), sub.textLen(s), PhonemeSet.NoChars)
         out.commitStagedOrMergeWith(n, sub.langAt(s), origLangs)
         s += 1
       }
@@ -963,9 +1095,7 @@ final class BeiderMorse(
 
   private def encodeWithMask(input0: String, l: String,
       seedMask: Long): String = {
-    val rules = config.rulesFor(nameType, "rules", l)
-    val finalRules1 = config.rulesFor(nameType, ruleType.code, "common")
-    val finalRules2 = config.rulesFor(nameType, ruleType.code, l)
+    val (rules, finalRules2) = rulesOf(l)
 
     val input = input0.toLowerCase(Locale.ROOT).replace('-', ' ')
 
@@ -975,31 +1105,40 @@ final class BeiderMorse(
         val combined = "d" + remainder
         return "(" + encode(remainder) + ")-(" + encode(combined) + ")"
       }
-      prefixesFor(nameType).foreach { prefix =>
-        if (input.startsWith(prefix + " ")) {
-          val remainder = input.substring(prefix.length + 1)
+      var p = 0
+      while (p < prefixes.length) {
+        val (prefix, prefixAndSpace) = prefixes(p)
+        if (input.startsWith(prefixAndSpace)) {
+          val remainder = input.substring(prefixAndSpace.length)
           val combined = prefix + remainder
           return "(" + encode(remainder) + ")-(" + encode(combined) + ")"
         }
+        p += 1
       }
     }
 
-    val words = BeiderMorse.Whitespace.split(input).filter(_.nonEmpty)
-
-    if (!concat && words.length != 1)
-      return words.map(encode).mkString("-")
-
-    val words2 = words.iterator
-      .map { w =>
-        if (nameType == NameType.Sephardic) w.split("'", -1).last else w
-      }
-      .filter(w =>
-        nameType == NameType.Generic || !prefixesFor(nameType).contains(w))
-      .toArray
-
     val finalInput =
-      if (concat) words2.mkString(" ")
-      else words(0)
+      if (nameType == NameType.Generic && !hasWhitespace(input)) {
+        // one word or none: the split, filter and join below give `input`
+        if (!concat && input.isEmpty) return ""
+        input
+      } else {
+        val words = BeiderMorse.Whitespace.split(input).filter(_.nonEmpty)
+
+        if (!concat && words.length != 1)
+          return words.map(encode).mkString("-")
+
+        val words2 = words.iterator
+          .map { w =>
+            if (nameType == NameType.Sephardic) w.split("'", -1).last else w
+          }
+          .filter(w =>
+            nameType == NameType.Generic || !prefixesFor(nameType).contains(w))
+          .toArray
+
+        if (concat) words2.mkString(" ")
+        else words(0)
+      }
 
     // thread-local arena workspace: the whole encode allocates no
     // per-candidate Strings — phoneme texts live in reused char arenas
@@ -1009,18 +1148,12 @@ final class BeiderMorse(
     var builder = ws.set0
     var spare = ws.set1
     builder.clearAll()
-    builder.insertIfAbsent("", seedMask)
+    builder.insertEmpty(seedMask)
     val cps = ws.cpsMain.resetFromString(finalInput)
     var i = 0
     val end = cps.length
     while (i < end) {
-      val bucket = rules.get(cps.cps(i))
-      var matched: BmRule = null
-      var b = 0
-      while (matched == null && b < bucket.length) {
-        if (bucket(b).matches(cps, i)) matched = bucket(b)
-        b += 1
-      }
+      val matched = rules.firstMatch(cps, i)
       if (matched != null) {
         spare.clearAll()
         applyRule(builder, matched.phonemes, spare)
@@ -1035,7 +1168,7 @@ final class BeiderMorse(
 
     // final passes: out + two scratch sets, all on arenas distinct from
     // the pass input's
-    val r1 = applyFinalRules(builder, finalRules1, ws.set2, spare, ws.set3,
+    val r1 = applyFinalRules(builder, finalRulesCommon, ws.set2, spare, ws.set3,
       ws.cpsPhoneme)
     val (out2, sA) =
       if (r1 eq ws.set2) {
@@ -1065,13 +1198,13 @@ object BeiderMorse {
       val set3 = new PhonemeSet(new PhonemeArena, 24)
       val cpsMain = new CodePoints("")
       val cpsPhoneme = new CodePoints("")
+      val cpsLang = new CodePoints("")
     }
     val tl: ThreadLocal[Ws] = ThreadLocal.withInitial(() => new Ws)
   }
 
   // precompiled: String.split(regex) recompiles multi-char patterns per call
   private[bm] val Whitespace = java.util.regex.Pattern.compile("\\s+")
-  private val CodeSeparators = java.util.regex.Pattern.compile("[|()\\-]+")
 
   /** Name prefixes encoded both with and without
     * (ref: src/beider_morse/engine.rs:11-32); iteration order is the
@@ -1086,6 +1219,16 @@ object BeiderMorse {
 
   private def prefixesFor(nt: NameType): SortedSet[String] = Prefixes(nt)
 
+  /** Whether `s` holds a char of `\s`, the separator of [[Whitespace]]. */
+  private def hasWhitespace(s: String): Boolean = {
+    var i = 0
+    while (i < s.length && {
+      val c = s.charAt(i)
+      !(c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r')
+    }) i += 1
+    i < s.length
+  }
+
   /** Default encoder: gen / approx / concat / 20 phonemes
     * (ref: src/beider_morse/mod.rs:298-312).
     */
@@ -1094,8 +1237,26 @@ object BeiderMorse {
   /** Splits an encoded value into flat blocking codes: `|` alternatives,
     * prefix groups `(a|b)-(c|d)` and non-concat word joins all flatten.
     */
-  def splitCodes(encoded: String): Array[String] =
-    CodeSeparators.split(encoded).filter(_.nonEmpty)
+  def splitCodes(encoded: String): Array[String] = {
+    def isSeparator(c: Char) = c == '|' || c == '(' || c == ')' || c == '-'
+    var count = 0
+    var i = 0
+    while (i < encoded.length) {
+      while (i < encoded.length && isSeparator(encoded.charAt(i))) i += 1
+      if (i < encoded.length) count += 1
+      while (i < encoded.length && !isSeparator(encoded.charAt(i))) i += 1
+    }
+    val out = new Array[String](count)
+    count = 0
+    i = 0
+    while (i < encoded.length) {
+      while (i < encoded.length && isSeparator(encoded.charAt(i))) i += 1
+      val start = i
+      while (i < encoded.length && !isSeparator(encoded.charAt(i))) i += 1
+      if (i > start) { out(count) = encoded.substring(start, i); count += 1 }
+    }
+    out
+  }
 
   /** Guessed languages of a name, sorted and '|'-joined; "any" when no
     * rule narrows the set, "" when rules contradict

@@ -92,14 +92,11 @@ object Scoring {
   }
 
   /** Scalar form of the strong-JW / tight-lev / bounded-prefix clause
-    * (identical to the Column form in [[edges]]; lev via the same
-    * UTF8String distance the fused expression uses).
+    * (identical to the Column form in [[edges]]; lev is the same distance
+    * the fused expression computes, without converting to UTF8String).
     */
   private def corroboration(a: String, b: String, jw: Double): Boolean = {
-    def lev: Int =
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .levenshteinDistance(
-          org.apache.spark.unsafe.types.UTF8String.fromString(b))
+    def lev: Int = graft.phonetic.Levenshtein.distance(a, b)
     def prefixPair: Boolean =
       math.min(a.length, b.length) >= MraPrefixMinLen &&
         math.max(a.length, b.length) <=

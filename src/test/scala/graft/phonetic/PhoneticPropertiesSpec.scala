@@ -1,7 +1,10 @@
 package graft.phonetic
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
+
+import graft.functions.PhoneticFunctions
 
 /** Property tests promised in SURVEY.md §5: determinism, output charset
   * closure, code-length invariants, and the Daitch-Mokotoff
@@ -64,10 +67,12 @@ class PhoneticPropertiesSpec extends AnyFunSuite {
       Gen.chooseNum(0x1F300, 0x1F6FF), // emoji
       Gen.chooseNum(0x20000, 0x2A6DF), // Han ext-B
       Gen.oneOf(0x0130, 0x0131, 0x03C2, 0xFB01, 0x200D, 0xFEFF, 0x0000,
-        0x0009, 0x00DF, 0x1E9E), // İ ı ς ﬁ zwj bom nul tab ß ẞ
+        0x0009, 0x00DF, 0x1E9E, 0x0149, 0x03A3), // İ ı ς ﬁ zwj bom nul tab ß ẞ ŉ Σ
       Gen.chooseNum('A'.toInt, 'z'.toInt))
-    Gen.listOf(cp).map(cps =>
+    val s = Gen.listOf(cp).map(cps =>
       new String(cps.take(24).flatMap(Character.toChars(_)).toArray))
+    // a word-final capital sigma lowercases to ς, elsewhere to σ
+    Gen.oneOf(s, s.map(_ + "ΟΣ"), s.map(_ + "ΑΣ b"))
   }
 
   test("every encoder is total and deterministic on arbitrary Unicode") {
@@ -76,6 +81,8 @@ class PhoneticPropertiesSpec extends AnyFunSuite {
     // throw — on ANY string, including supplementary-plane codepoints and
     // combining marks. This pins that totality contract.
     val bm = graft.phonetic.bm.BeiderMorse.default
+    val bmBlocking = new graft.phonetic.bm.BeiderMorse(maxPhonemes = 4)
+    val (gen, approx) = (UTF8String.fromString("gen"), UTF8String.fromString("approx"))
     forAll(unicodeGen, n = 400) { s =>
       encoders.foreach { case (name, enc) =>
         val out =
@@ -87,6 +94,10 @@ class PhoneticPropertiesSpec extends AnyFunSuite {
         assert(out == enc(s), s"$name not deterministic on '$s'")
       }
       assert(bm.encode(s) == bm.encode(s))
+      assert(bmBlocking.encode(s) == bmBlocking.encode(s))
+      val u = UTF8String.fromString(s)
+      val codes = PhoneticFunctions.bmCodes(u, gen, approx, true, 20)
+      assert(codes == PhoneticFunctions.bmCodes(u, gen, approx, true, 20))
       assert(graft.phonetic.bm.BeiderMorse.guessLanguages(s,
         graft.phonetic.bm.NameType.Generic) ==
         graft.phonetic.bm.BeiderMorse.guessLanguages(s,
@@ -97,6 +108,11 @@ class PhoneticPropertiesSpec extends AnyFunSuite {
       Soundex.default.difference(s, s.reverse)
       RefinedSoundex.default.difference(s, s.reverse)
       DoubleMetaphone.default.isDoubleMetaphoneEqual(s, s.reverse, alternate = false)
+    }
+    forAll2(unicodeGen, n = 400) { (a, b) =>
+      val (ua, ub) = (UTF8String.fromString(a), UTF8String.fromString(b))
+      assert(PhoneticFunctions.scoreFeatures(ua, ub) == PhoneticFunctions.scoreFeatures(ua, ub),
+        s"scoreFeatures not deterministic on '$a', '$b'")
     }
   }
 

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSessionTestWrapper, TempDirs}
@@ -236,5 +237,21 @@ class LinkagePipelineSpec extends AnyFunSuite with TempDirs {
     assert(!io2.isCommitted("resolved"))
     val count3 = new LinkagePipeline(spark, io2).run(files).count()
     assert(count3 == count1)
+  }
+
+  test("q_linkage_clusters and entry: two calls each leave at most their results persisted") {
+    val sc = spark.sparkContext
+    Seq[(String, () => DataFrame)](
+      "q_linkage_clusters" -> (() => graft.SparkEntry.queries("q_linkage_clusters")(spark, "")),
+      "entry" -> (() => graft.SparkEntry.entry(spark))).foreach { case (name, call) =>
+      val before = sc.getPersistentRDDs.keySet
+      val results = (1 to 2).map { _ =>
+        val out = call()
+        assert(out.count() > 0)
+        out
+      }
+      val left = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(left.size <= results.size, s"two $name calls left ${left.size} RDDs persisted")
+    }
   }
 }
