@@ -107,13 +107,15 @@ object PhoneticFunctions {
   def mraRating(a: UTF8String, b: UTF8String): Int =
     MatchRatingApproach.rating(a.toString, b.toString)
 
-  def dmSoundex(u: UTF8String): ArrayData = {
-    val codes = DaitchMokotoff.default.codes(u.toString, branching = true)
+  private def outArray(codes: Array[String]): ArrayData = {
     val arr = new Array[Any](codes.length)
     var i = 0
     while (i < codes.length) { arr(i) = out(codes(i)); i += 1 }
     new GenericArrayData(arr)
   }
+
+  def dmSoundex(u: UTF8String): ArrayData =
+    outArray(DaitchMokotoff.default.codes(u.toString, branching = true))
 
   def dmEncode(u: UTF8String): UTF8String =
     out(DaitchMokotoff.default.encode(u.toString))
@@ -129,7 +131,8 @@ object PhoneticFunctions {
 
   /** All pairwise scoring features in ONE pass — strings converted once,
     * MRA encodes shared between rating and match decision, Levenshtein on
-    * the raw UTF8Strings' characters ([[Levenshtein]], equal to Spark's). Returns struct(jaro_winkler, lev, mra_match,
+    * the raw UTF8Strings' characters ([[Levenshtein]], equal to Spark's).
+    * Returns struct(jaro_winkler, lev, mra_match,
     * mra_rating, metaphone_eq, soundex_diff); whole-stage codegen's
     * subexpression elimination keeps it evaluated once per row even when
     * all six fields are projected.
@@ -170,11 +173,7 @@ object PhoneticFunctions {
       concat: Boolean, maxPhonemes: Int): ArrayData = {
     val raw = bmEngine(nameType.toString, ruleType.toString, concat, maxPhonemes)
       .encode(u.toString)
-    val codes = bm.BeiderMorse.splitCodes(raw)
-    val arr = new Array[Any](codes.length)
-    var i = 0
-    while (i < codes.length) { arr(i) = out(codes(i)); i += 1 }
-    new GenericArrayData(arr)
+    outArray(bm.BeiderMorse.splitCodes(raw))
   }
 
   /** Language guessing as a queryable column

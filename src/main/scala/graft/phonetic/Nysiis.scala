@@ -96,8 +96,7 @@ object Nysiis {
       case _ =>
         if (current == 'S' && next == 'C' && nextNext == 'H') put("SSS")
         else if (current == 'P' && next == 'H') put("FF")
-        else if ((current == 'H' && (!isVowel(previous) ||
-            next == NoChar || !isVowel(next))) ||
+        else if ((current == 'H' && (!isVowel(previous) || !isVowel(next))) ||
             (current == 'W' && isVowel(previous))) chars(index) = previous
     }
   }
