@@ -1,16 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** A learned BPE merge table in evaluation form: rank lookup plus a
   * per-executor word memo (corpus words repeat heavily — Zipf — so most
-  * rows hit the cache instead of re-running the merge loop). Shipped to
-  * executors as a plan reference object by the expressions below.
+  * rows hit the cache instead of re-running the merge loop). Built from
+  * the merges literal once per plan copy of a `graft_bpe_*` call and
+  * shipped to executors as a plan reference object.
   */
 final class BpeModel(mergesStr: String) extends Serializable {
   val ranks: Map[(String, String), Int] = graft.ops.Bpe.parseMerges(mergesStr)
@@ -45,47 +42,4 @@ object BpeFunctions {
       .foreach(w => buf ++= model.encodeWord(w))
     new GenericArrayData(buf.toArray)
   }
-}
-
-abstract class BpeExprBase extends UnaryExpression {
-  def mergesStr: String
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  // built once per (de)serialized plan copy, shared across rows
-  @transient protected lazy val model = new BpeModel(mergesStr)
-}
-
-/** Number of learned-BPE subword tokens in a text — the unit a
-  * training-data pipeline budgets corpora in.
-  */
-case class BpeCountExpr(child: Expression, mergesStr: String)
-    extends BpeExprBase {
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(input: Any): Any =
-    BpeFunctions.countTokens(input.asInstanceOf[UTF8String], model)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("bpeModel", model)
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeFunctions.countTokens($c, $m)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_bpe_count"
-}
-
-/** The BPE token stream itself (array&lt;string&gt;). */
-case class BpeEncodeExpr(child: Expression, mergesStr: String)
-    extends BpeExprBase {
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    BpeFunctions.encode(input.asInstanceOf[UTF8String], model)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("bpeModel", model)
-    defineCodeGen(ctx, ev, c => s"graft.functions.BpeFunctions.encode($c, $m)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_bpe_encode"
 }

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.types._
+
+import graft.phonetic.{Soundex, bm}
 
 /** Registration + Column API for the phonetic Catalyst expressions.
   *
@@ -13,181 +16,209 @@ import org.apache.spark.sql.functions.call_function
   */
 object GraftFunctions {
 
-  /** Option arguments are folded at registration time — they must be
-    * non-null foldable literals; anything else fails analysis with a clear
-    * message instead of silently evaluating against no input row.
+  /** A plan-time option argument: its documented name, how its literal is
+    * read, its default (None when every call must pass it) and a check
+    * that throws an IllegalArgumentException on a value the function
+    * cannot run with.
     */
-  private def lit(e: Expression, param: String): Any = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"option argument '$param' must be a literal, got: ${e.sql}")
-    val v = e.eval()
-    if (v == null)
-      throw new IllegalArgumentException(
-        s"option argument '$param' must not be NULL")
-    v
+  final case class Opt(name: String, read: Any => Any, default: Option[Any],
+      check: Any => Unit = _ => ()) {
+
+    /** The option's value in a call. It must be a non-null foldable
+      * literal that passes `check`; anything else fails analysis with a
+      * clear message instead of failing, or silently evaluating against no
+      * input row, once rows arrive.
+      */
+    def value(e: Expression): Any = {
+      if (!e.foldable)
+        throw new IllegalArgumentException(
+          s"option argument '$name' must be a literal, got: ${e.sql}")
+      val v = e.eval()
+      if (v == null)
+        throw new IllegalArgumentException(
+          s"option argument '$name' must not be NULL")
+      val x = read(v)
+      try check(x)
+      catch {
+        case err: IllegalArgumentException =>
+          throw new IllegalArgumentException(
+            s"option argument '$name' is invalid: ${err.getMessage}")
+      }
+      x
+    }
+
+    def required: Opt = copy(default = None)
   }
 
-  private def intLit(e: Expression, param: String = "maxLen"): Int =
-    lit(e, param).asInstanceOf[Number].intValue()
+  private def int(name: String, default: Option[Int] = None): Opt =
+    Opt(name, _.asInstanceOf[Number].intValue(), default)
+  private def bool(name: String, default: Option[Boolean] = None): Opt =
+    Opt(name, _.asInstanceOf[Boolean], default)
+  private def str(name: String, default: Option[String] = None): Opt =
+    Opt(name, _.toString, default)
 
-  private def boolLit(e: Expression, param: String = "flag"): Boolean =
-    lit(e, param).asInstanceOf[Boolean]
+  /** One SQL function: `args` column arguments, then `options`, of which
+    * those with a default come last and may be left off from the end.
+    * `build` makes the expression from the columns and the option values.
+    */
+  final case class Fn(name: String, args: Int, options: Seq[Opt],
+      usage: String, build: (Seq[Expression], Seq[Any]) => Expression) {
 
-  private def strLit(e: Expression, param: String = "option"): String =
-    lit(e, param).toString
+    def apply(exprs: Seq[Expression]): Expression = {
+      val passed = exprs.length - args
+      if (passed < options.count(_.default.isEmpty) || passed > options.length)
+        throw new IllegalArgumentException(
+          s"$name: invalid number of arguments (${exprs.length})")
+      build(exprs.take(args), options.zipWithIndex.map { case (o, i) =>
+        if (i < passed) o.value(exprs(args + i)) else o.default.get
+      })
+    }
+  }
 
-  /** (name, builder, usage) for every function. */
-  val builders: Seq[(String, Seq[Expression] => Expression, String)] = Seq(
-    ("graft_soundex", { case Seq(c) => SoundexExpr(c) },
+  /** A function served by [[StringCall]]: the static `target.method` over
+    * `args` string columns and the option values.
+    */
+  private def call(name: String, target: String, method: String,
+      dataType: DataType, args: Int, options: Opt*)(usage: String): Fn =
+    Fn(name, args, options, usage,
+      (cs, os) => StringCall(name, target, method, dataType, cs, os))
+
+  private val Phonetic = "graft.functions.PhoneticFunctions"
+  private val Codes = ArrayType(StringType, containsNull = false)
+
+  private val maxLen = int("maxLen", Some(4))
+  private val nameType = str("nameType", Some("gen"))
+    .copy(check = v => bm.NameType.parse(v.toString))
+  private val ruleType = str("ruleType", Some("approx"))
+    .copy(check = v => bm.RuleType.parse(v.toString))
+  private val concat = bool("concat", Some(true))
+  private val maxPhonemes = int("maxPhonemes", Some(20))
+  private val bmOptions = Seq(nameType, ruleType, concat, maxPhonemes)
+
+  /** Every registered function, one row each. */
+  val builders: Seq[Fn] = Seq(
+    call("graft_soundex", Phonetic, "soundex", StringType, 1)(
       "graft_soundex(str) - American Soundex (commons-codec semantics incl. H/W rule)"),
-    ("graft_soundex_genealogy", { case Seq(c) => SoundexGenealogyExpr(c) },
+    call("graft_soundex_genealogy", Phonetic, "soundexGenealogy", StringType, 1)(
       "graft_soundex_genealogy(str) - Soundex with the genealogy.com mapping"),
-    ("graft_soundex_simplified", { case Seq(c) => SoundexSimplifiedExpr(c) },
+    call("graft_soundex_simplified", Phonetic, "soundexSimplified", StringType, 1)(
       "graft_soundex_simplified(str) - Soundex without the H/W special case"),
-    ("graft_soundex_mapping",
-      { case Seq(c, m) => SoundexMappingExpr(c, strLit(m, "mapping")) },
+    call("graft_soundex_mapping", Phonetic, "soundexMapping", StringType, 1,
+      str("mapping").copy(check = m => Soundex.fromMapping(m.toString)))(
       "graft_soundex_mapping(str, mapping) - Soundex with a custom 26-char mapping literal"),
-    ("graft_refined_soundex", { case Seq(c) => RefinedSoundexExpr(c) },
+    call("graft_refined_soundex", Phonetic, "refinedSoundex", StringType, 1)(
       "graft_refined_soundex(str) - Refined Soundex"),
-    ("graft_metaphone", {
-      case Seq(c) => MetaphoneExpr(c, 4)
-      case Seq(c, l) => MetaphoneExpr(c, intLit(l))
-    }, "graft_metaphone(str[, maxLen]) - Metaphone; maxLen<=0 for unbounded"),
-    ("graft_double_metaphone", {
-      case Seq(c) => DoubleMetaphoneExpr(c, 4)
-      case Seq(c, l) => DoubleMetaphoneExpr(c, intLit(l))
-    }, "graft_double_metaphone(str[, maxLen]) - array(primary, alternate)"),
-    ("graft_double_metaphone_primary",
-      { case Seq(c) => DoubleMetaphonePrimaryExpr(c) },
-      "graft_double_metaphone_primary(str)"),
-    ("graft_double_metaphone_alternate",
-      { case Seq(c) => DoubleMetaphoneAlternateExpr(c) },
+    call("graft_metaphone", Phonetic, "metaphone", StringType, 1, maxLen)(
+      "graft_metaphone(str[, maxLen]) - Metaphone; maxLen<=0 for unbounded"),
+    call("graft_double_metaphone", Phonetic, "doubleMetaphone", Codes, 1, maxLen)(
+      "graft_double_metaphone(str[, maxLen]) - array(primary, alternate)"),
+    call("graft_double_metaphone_primary", Phonetic, "doubleMetaphonePrimary",
+      StringType, 1)("graft_double_metaphone_primary(str)"),
+    call("graft_double_metaphone_alternate", Phonetic,
+      "doubleMetaphoneAlternate", StringType, 1)(
       "graft_double_metaphone_alternate(str)"),
-    ("graft_nysiis", {
-      case Seq(c) => NysiisExpr(c, strict = true)
-      case Seq(c, s) => NysiisExpr(c, boolLit(s))
-    }, "graft_nysiis(str[, strict]) - NYSIIS"),
-    ("graft_phonex", {
-      case Seq(c) => PhonexExpr(c, 4)
-      case Seq(c, l) => PhonexExpr(c, intLit(l))
-    }, "graft_phonex(str[, maxLen]) - Phonex"),
-    ("graft_cologne", { case Seq(c) => CologneExpr(c) },
+    call("graft_nysiis", Phonetic, "nysiis", StringType, 1,
+      bool("strict", Some(true)))("graft_nysiis(str[, strict]) - NYSIIS"),
+    call("graft_phonex", Phonetic, "phonex", StringType, 1,
+      maxLen.copy(check = l =>
+        require(l.asInstanceOf[Int] >= 0, "maxLen must not be negative")))(
+      "graft_phonex(str[, maxLen]) - Phonex"),
+    call("graft_cologne", Phonetic, "cologne", StringType, 1)(
       "graft_cologne(str) - Koelner Phonetik"),
-    ("graft_caverphone1", { case Seq(c) => Caverphone1Expr(c) },
+    call("graft_caverphone1", Phonetic, "caverphone1", StringType, 1)(
       "graft_caverphone1(str) - Caverphone 1 (6 chars)"),
-    ("graft_caverphone2", { case Seq(c) => Caverphone2Expr(c) },
+    call("graft_caverphone2", Phonetic, "caverphone2", StringType, 1)(
       "graft_caverphone2(str) - Caverphone 2 (10 chars)"),
-    ("graft_mra_encode", { case Seq(c) => MraEncodeExpr(c) },
+    call("graft_mra_encode", Phonetic, "mraEncode", StringType, 1)(
       "graft_mra_encode(str) - Match Rating Approach codex"),
-    ("graft_mra_match", { case Seq(a, b) => MraMatchExpr(a, b) },
+    call("graft_mra_match", Phonetic, "mraMatch", BooleanType, 2)(
       "graft_mra_match(a, b) - MRA similarity-rating match decision"),
-    ("graft_mra_rating", { case Seq(a, b) => MraRatingExpr(a, b) },
+    call("graft_mra_rating", Phonetic, "mraRating", IntegerType, 2)(
       "graft_mra_rating(a, b) - MRA rating (6 best, -1 guard failure)"),
-    ("graft_double_metaphone_equal", {
-      case Seq(a, b) => DoubleMetaphoneEqualExpr(a, b, alternate = false)
-      case Seq(a, b, alt) =>
-        DoubleMetaphoneEqualExpr(a, b, boolLit(alt, "alternate"))
-    }, "graft_double_metaphone_equal(a, b[, alternate]) - compare primary " +
-      "(or alternate) double-metaphone codes"),
-    ("graft_bm_guess_lang", {
-      case Seq(c) => BmGuessLangExpr(c, "gen")
-      case Seq(c, nt) => BmGuessLangExpr(c, strLit(nt, "nameType"))
-    }, "graft_bm_guess_lang(str[, nameType]) - Beider-Morse guessed " +
+    call("graft_double_metaphone_equal", Phonetic, "doubleMetaphoneEqual",
+      BooleanType, 2, bool("alternate", Some(false)))(
+      "graft_double_metaphone_equal(a, b[, alternate]) - compare primary " +
+        "(or alternate) double-metaphone codes"),
+    call("graft_bm_guess_lang", Phonetic, "bmGuessLang", StringType, 1,
+      nameType)("graft_bm_guess_lang(str[, nameType]) - Beider-Morse guessed " +
       "languages, sorted and '|'-joined ('any' when unrestricted)"),
-    ("graft_bm_encode_langs", {
-      case Seq(c, nt, rt, cc, mp, langs) =>
-        BmEncodeWithLangsExpr(c, strLit(nt, "nameType"),
-          strLit(rt, "ruleType"), boolLit(cc, "concat"),
-          intLit(mp, "maxPhonemes"), strLit(langs, "languagesCsv"))
-    }, "graft_bm_encode_langs(str, nameType, ruleType, concat, maxPhonemes, " +
-      "languagesCsv) - Beider-Morse encode restricted to a language set"),
-    ("graft_dm_soundex", { case Seq(c) => DmSoundexExpr(c) },
+    call("graft_bm_encode_langs", Phonetic, "bmEncodeWithLangs", StringType, 1,
+      bmOptions.map(_.required) :+ str("languagesCsv"): _*)(
+      "graft_bm_encode_langs(str, nameType, ruleType, concat, maxPhonemes, " +
+        "languagesCsv) - Beider-Morse encode restricted to a language set"),
+    call("graft_dm_soundex", Phonetic, "dmSoundex", Codes, 1)(
       "graft_dm_soundex(str) - Daitch-Mokotoff branching codes as array"),
-    ("graft_dm_encode", { case Seq(c) => DmEncodeExpr(c) },
+    call("graft_dm_encode", Phonetic, "dmEncode", StringType, 1)(
       "graft_dm_encode(str) - Daitch-Mokotoff single (non-branching) code"),
-    ("graft_soundex_difference", { case Seq(a, b) => SoundexDifferenceExpr(a, b) },
+    call("graft_soundex_difference", Phonetic, "soundexDifference",
+      IntegerType, 2)(
       "graft_soundex_difference(a, b) - positional overlap of soundex codes (0-4)"),
-    ("graft_refined_soundex_difference",
-      { case Seq(a, b) => RefinedSoundexDifferenceExpr(a, b) },
+    call("graft_refined_soundex_difference", Phonetic,
+      "refinedSoundexDifference", IntegerType, 2)(
       "graft_refined_soundex_difference(a, b)"),
-    ("graft_jaro_winkler", { case Seq(a, b) => JaroWinklerExpr(a, b) },
+    call("graft_jaro_winkler", Phonetic, "jaroWinkler", DoubleType, 2)(
       "graft_jaro_winkler(a, b) - Jaro-Winkler similarity in [0,1]"),
-    ("graft_score_features", { case Seq(a, b) => ScoreFeaturesExpr(a, b) },
+    // every feature of graft.pipeline.Scoring in one evaluation (strings
+    // converted once, MRA encodes shared)
+    call("graft_score_features", Phonetic, "scoreFeatures", StructType(Seq(
+      StructField("jaro_winkler", DoubleType, nullable = false),
+      StructField("lev", IntegerType, nullable = false),
+      StructField("mra_match", BooleanType, nullable = false),
+      StructField("mra_rating", IntegerType, nullable = false),
+      StructField("metaphone_eq", BooleanType, nullable = false),
+      StructField("soundex_diff", IntegerType, nullable = false))), 2)(
       "graft_score_features(a, b) - struct of all pairwise scoring " +
         "features computed in one pass"),
-    ("graft_beider_morse", {
-      case Seq(c) => BeiderMorseExpr(c, "gen", "approx", concat = true, 20)
-      case Seq(c, nt) => BeiderMorseExpr(c, strLit(nt), "approx", concat = true, 20)
-      case Seq(c, nt, rt) =>
-        BeiderMorseExpr(c, strLit(nt), strLit(rt), concat = true, 20)
-      case Seq(c, nt, rt, cc) =>
-        BeiderMorseExpr(c, strLit(nt), strLit(rt), boolLit(cc), 20)
-      case Seq(c, nt, rt, cc, mp) =>
-        BeiderMorseExpr(c, strLit(nt), strLit(rt), boolLit(cc), intLit(mp))
-    }, "graft_beider_morse(str[, nameType, ruleType, concat, maxPhonemes]) - " +
-      "Beider-Morse encoding, '|'-joined variants"),
-    ("graft_bm_codes", {
-      case Seq(c) => BmCodesExpr(c, "gen", "approx", concat = true, 20)
-      case Seq(c, nt) => BmCodesExpr(c, strLit(nt), "approx", concat = true, 20)
-      case Seq(c, nt, rt) =>
-        BmCodesExpr(c, strLit(nt), strLit(rt), concat = true, 20)
-      case Seq(c, nt, rt, cc) =>
-        BmCodesExpr(c, strLit(nt), strLit(rt), boolLit(cc), 20)
-      case Seq(c, nt, rt, cc, mp) =>
-        BmCodesExpr(c, strLit(nt), strLit(rt), boolLit(cc), intLit(mp))
-    }, "graft_bm_codes(str[, nameType, ruleType, concat, maxPhonemes]) - " +
-      "Beider-Morse variants flattened to array<string> for explode()"),
-    ("graft_cosine", { case Seq(a, b) => CosineExpr(a, b) },
+    call("graft_beider_morse", Phonetic, "beiderMorse", StringType, 1,
+      bmOptions: _*)(
+      "graft_beider_morse(str[, nameType, ruleType, concat, maxPhonemes]) - " +
+        "Beider-Morse encoding, '|'-joined variants"),
+    call("graft_bm_codes", Phonetic, "bmCodes", Codes, 1, bmOptions: _*)(
+      "graft_bm_codes(str[, nameType, ruleType, concat, maxPhonemes]) - " +
+        "Beider-Morse variants flattened to array<string> for explode()"),
+    Fn("graft_cosine", 2, Nil,
       "graft_cosine(a, b) - cosine similarity of two numeric arrays " +
-        "(single-pass, codegen'd)"),
-    ("graft_lsh_signatures", {
-      case Seq(c, d, p, b, s) => LshSignaturesExpr(c, intLit(d, "dim"),
-        intLit(p, "nPlanes"), intLit(b, "bands"), intLit(s, "seedBase"))
-    }, "graft_lsh_signatures(vec, dim, nPlanes, bands, seedBase) - " +
-      "array of per-band random-hyperplane LSH signatures (single pass); " +
-      "vec must have exactly dim elements"),
-    ("graft_langid", {
-      case Seq(c) => LangIdExpr(c)
-      case Seq(c, m) => LangIdExpr(c, intLit(m, "minHits"))
-    }, "graft_langid(text[, minHits]) - stopword-signature language ID " +
-      "(single-pass form of TextAnalysis.langIdCol); guesses with fewer " +
-      "than minHits signature hits map to 'und'"),
-    ("graft_langid_scored", {
-      case Seq(c) => LangIdScoredExpr(c)
-      case Seq(c, m) => LangIdScoredExpr(c, intLit(m, "minHits"))
-    }, "graft_langid_scored(text[, minHits]) - struct(lang, hits): floored " +
-      "language guess plus raw best-signature hit count"),
-    ("graft_tokens", { case Seq(c) => TokensExpr(c) },
+        "(single-pass, codegen'd)",
+      (cs, _) => CosineExpr(cs(0), cs(1))),
+    Fn("graft_lsh_signatures", 1,
+      Seq(int("dim"), int("nPlanes"), int("bands"), int("seedBase")),
+      "graft_lsh_signatures(vec, dim, nPlanes, bands, seedBase) - " +
+        "array of per-band random-hyperplane LSH signatures (single pass); " +
+        "vec must have exactly dim elements",
+      (cs, os) => LshSignaturesExpr(cs.head, os(0).asInstanceOf[Int],
+        os(1).asInstanceOf[Int], os(2).asInstanceOf[Int],
+        os(3).asInstanceOf[Int])),
+    // the single-expression form of TextAnalysis.langIdCol (bit-identical,
+    // parity-pinned in OpsSpec)
+    call("graft_langid", "graft.ops.TextAnalysis", "langIdUtf8", StringType,
+      1, int("minHits", Some(1)))(
+      "graft_langid(text[, minHits]) - stopword-signature language ID " +
+        "(single-pass form of TextAnalysis.langIdCol); guesses with fewer " +
+        "than minHits signature hits map to 'und'"),
+    call("graft_langid_scored", "graft.ops.TextAnalysis", "langIdScored",
+      StructType(Seq(
+        StructField("lang", StringType, nullable = false),
+        StructField("hits", IntegerType, nullable = false))),
+      1, int("minHits", Some(1)))(
+      "graft_langid_scored(text[, minHits]) - struct(lang, hits): floored " +
+        "language guess plus raw best-signature hit count"),
+    call("graft_tokens", "graft.functions.Tokens", "tokensArray", Codes, 1)(
       "graft_tokens(text) - portable Unicode tokens (CJK chars single, " +
         "other letter/digit runs as words) of the lowercased text"),
-    ("graft_minhash_signature", {
-      case Seq(c) => MinHashSignatureExpr(c, 64, 3)
-      case Seq(c, n) => MinHashSignatureExpr(c, intLit(n), 3)
-      case Seq(c, n, k) => MinHashSignatureExpr(c, intLit(n), intLit(k))
-    }, "graft_minhash_signature(text[, numHashes[, k]]) - MinHash signature of word k-shingles"),
-    ("graft_bpe_count", {
-      case Seq(c, m) => BpeCountExpr(c, strLit(m, "merges"))
-    }, "graft_bpe_count(text, merges) - learned-BPE subword token count; " +
-      "merges is the newline-joined table from Bpe.mergesAsString"),
-    ("graft_bpe_encode", {
-      case Seq(c, m) => BpeEncodeExpr(c, strLit(m, "merges"))
-    }, "graft_bpe_encode(text, merges) - learned-BPE subword token stream " +
-      "as array<string>")
+    call("graft_minhash_signature", "graft.functions.MinHashFunctions",
+      "minhashSignature", ArrayType(LongType, containsNull = false), 1,
+      int("numHashes", Some(64)), int("k", Some(3)))(
+      "graft_minhash_signature(text[, numHashes[, k]]) - MinHash signature of word k-shingles"),
+    // the merges text becomes one BpeModel per plan copy
+    call("graft_bpe_count", "graft.functions.BpeFunctions", "countTokens",
+      IntegerType, 1, str("merges"))(
+      "graft_bpe_count(text, merges) - learned-BPE subword token count; " +
+        "merges is the newline-joined table from Bpe.mergesAsString"),
+    call("graft_bpe_encode", "graft.functions.BpeFunctions", "encode", Codes,
+      1, str("merges"))(
+      "graft_bpe_encode(text, merges) - learned-BPE subword token stream " +
+        "as array<string>")
   )
-
-  /** Wraps a builder so a wrong argument count raises a clear arity error
-    * instead of a bare MatchError.
-    */
-  private[functions] def checkedBuilder(name: String,
-      builder: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    args =>
-      try builder(args)
-      catch {
-        case _: MatchError =>
-          throw new IllegalArgumentException(
-            s"$name: invalid number of arguments (${args.length})")
-      }
 
   /** Registries this object has already populated, keyed on registry
     * identity (weak, so dropped sessions can be collected). Skipping on a
@@ -213,10 +244,8 @@ object GraftFunctions {
     val registry = spark.sessionState.functionRegistry
     registeredRegistries.synchronized {
       if (!registeredRegistries.containsKey(registry)) {
-        builders.foreach { case (name, builder, _) =>
-          registry.createOrReplaceTempFunction(
-            name, checkedBuilder(name, builder), "built-in")
-        }
+        builders.foreach(f =>
+          registry.createOrReplaceTempFunction(f.name, f.apply, "built-in"))
         registeredRegistries.put(registry, java.lang.Boolean.TRUE)
       }
     }
@@ -263,11 +292,12 @@ object GraftFunctions {
 /** `spark.sql.extensions`-pluggable registration. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.builders.foreach { case (name, builder, usage) =>
+    GraftFunctions.builders.foreach { f =>
       ext.injectFunction(
-        (FunctionIdentifier(name),
-          new ExpressionInfo("graft.functions.GraftFunctions", name, usage),
-          GraftFunctions.checkedBuilder(name, builder)))
+        (FunctionIdentifier(f.name),
+          new ExpressionInfo("graft.functions.GraftFunctions", null, f.name,
+            f.usage, "", "", "", "", "", "", "built-in"),
+          f.apply))
     }
   }
 }

@@ -1,12 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass MinHash signature computation over a PORTABLE hash spec.
@@ -119,24 +115,6 @@ object MinHashFunctions {
     }
     new GenericArrayData(mins.map(l => l: Any))
   }
-}
-
-case class MinHashSignatureExpr(child: Expression, numHashes: Int, k: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashFunctions.minhashSignature(
-      input.asInstanceOf[UTF8String], numHashes, k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.MinHashFunctions.minhashSignature($c, $numHashes, $k)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_minhash_signature"
 }
 
 object MinHash {

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The shared PORTABLE Unicode token spec for MinHash / SimHash / text
@@ -110,7 +106,7 @@ object Tokens {
   }
 
   /** Tokens of a raw (not yet lowercased) string — the scalar form of the
-    * spec, shared by [[TokensExpr]] and the test suites.
+    * spec, shared by `graft_tokens` and the test suites.
     */
   def tokens(text: String): Array[String] = {
     val chars = text.toLowerCase(java.util.Locale.ROOT).toCharArray
@@ -128,69 +124,4 @@ object Tokens {
   def tokensArray(u: UTF8String): GenericArrayData =
     new GenericArrayData(
       tokens(u.toString).map(UTF8String.fromString(_): Any))
-}
-
-/** graft_langid(text[, minHits]) -> language code: single-expression form
-  * of [[graft.ops.TextAnalysis.langIdCol]] (bit-identical — parity-pinned
-  * in OpsSpec). One lowercase pass + intrinsified substring scans per row
-  * instead of |langs| x |signatures| regex splits. `minHits` is the
-  * confidence floor: guesses with fewer signature hits map to "und".
-  */
-case class LangIdExpr(child: Expression, minHits: Int = 1)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(input: Any): Any =
-    graft.ops.TextAnalysis.langIdUtf8(input.asInstanceOf[UTF8String], minHits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.ops.TextAnalysis.langIdUtf8($c, $minHits)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_langid"
-}
-
-/** graft_langid_scored(text[, minHits]) -> struct(lang, hits): the floored
-  * guess plus the raw best-signature hit count, so routing passes can
-  * filter on confidence without recomputing and audits keep the evidence.
-  */
-case class LangIdScoredExpr(child: Expression, minHits: Int = 1)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = StructType(Seq(
-    StructField("lang", StringType, nullable = false),
-    StructField("hits", IntegerType, nullable = false)))
-  override protected def nullSafeEval(input: Any): Any =
-    graft.ops.TextAnalysis.langIdScored(input.asInstanceOf[UTF8String], minHits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.ops.TextAnalysis.langIdScored($c, $minHits)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_langid_scored"
-}
-
-/** graft_tokens(text) -> array<string> of the portable Unicode token spec
-  * ([[Tokens]]): the one tokenizer MinHash, SimHash and any token-level op
-  * share, so batch, streaming and the DuckDB oracle cannot drift.
-  */
-case class TokensExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    Tokens.tokensArray(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Tokens.tokensArray($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_tokens"
 }

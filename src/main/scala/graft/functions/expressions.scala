@@ -1,464 +1,113 @@
 package graft.functions
 
+import java.lang.reflect.{InvocationTargetException, Method, Modifier}
+
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Catalyst expressions for the phonetic encoders.
+/** A call of one SQL function over string arguments: the Catalyst
+  * expression behind every string-input row of [[GraftFunctions.builders]].
   *
-  * Each is a deterministic, null-safe expression that stays inside
-  * whole-stage codegen: `doGenCode` emits a direct static call into
-  * [[PhoneticFunctions]] (no ScalaUDF boxing, no CodegenFallback). The
-  * reference's `Encoder.encode` maps 1:1 onto these
-  * (ref: /root/reference/src/lib.rs:180-232).
+  * It is deterministic and null-safe (NULL when any argument is NULL), and
+  * it stays inside whole-stage codegen: `doGenCode` emits a direct call of
+  * the static method `target.method(strings..., options...)` (no ScalaUDF
+  * boxing, no CodegenFallback). The reference's `Encoder.encode` maps 1:1
+  * onto these calls (ref: /root/reference/src/lib.rs:180-232).
+  *
+  * `options` are the call's plan-time literals as plain values (Int,
+  * Boolean, String), so equal calls compare equal. Int and Boolean options
+  * are inlined into the generated code. A String option is passed as the
+  * method's parameter type takes it: a `UTF8String`, or an object built
+  * from the string (such as a [[BpeModel]]), made once per plan copy.
   */
-private object Gen {
-  val F = "graft.functions.PhoneticFunctions"
-}
+case class StringCall(
+    name: String,
+    target: String,
+    method: String,
+    dataType: DataType,
+    children: Seq[Expression],
+    options: Seq[Any]) extends Expression {
 
-abstract class StringUnaryPhonetic extends UnaryExpression {
+  override def prettyName: String = name
+  override def nullable: Boolean = children.exists(_.nullable)
+  override def foldable: Boolean = children.forall(_.foldable)
+  override protected def stringArgs: Iterator[Any] =
+    children.iterator ++ options.iterator
+
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = StringType
-  /** simple name of the static method in PhoneticFunctions */
-  def method: String
-  override protected def nullSafeEval(input: Any): Any = evalString(input)
-  protected def evalString(input: Any): Any
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${Gen.F}.$method($c)")
-}
-
-case class SoundexExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "soundex"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.soundex(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_soundex"
-}
-
-case class SoundexGenealogyExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "soundexGenealogy"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.soundexGenealogy(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_soundex_genealogy"
-}
-
-case class SoundexSimplifiedExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "soundexSimplified"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.soundexSimplified(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_soundex_simplified"
-}
-
-/** Soundex with an arbitrary 26-char mapping folded in at plan time
-  * (ref: /root/reference/src/soundex.rs:117-125).
-  */
-case class SoundexMappingExpr(child: Expression, mapping: String)
-    extends StringUnaryPhonetic {
-  override def method: String = "soundexMapping"
-  private val mappingU8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(mapping)
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.soundexMapping(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], mappingU8)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val m = ctx.addReferenceObj("soundexMapping", mappingU8)
-    defineCodeGen(ctx, ev, c => s"${Gen.F}.soundexMapping($c, $m)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_soundex_mapping"
-}
-
-case class RefinedSoundexExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "refinedSoundex"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.refinedSoundex(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_refined_soundex"
-}
-
-case class CologneExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "cologne"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.cologne(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_cologne"
-}
-
-case class Caverphone1Expr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "caverphone1"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.caverphone1(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_caverphone1"
-}
-
-case class Caverphone2Expr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "caverphone2"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.caverphone2(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_caverphone2"
-}
-
-case class MraEncodeExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "mraEncode"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.mraEncode(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_mra_encode"
-}
-
-case class DmEncodeExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "dmEncode"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.dmEncode(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_dm_encode"
-}
-
-case class DoubleMetaphonePrimaryExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "doubleMetaphonePrimary"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.doubleMetaphonePrimary(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_double_metaphone_primary"
-}
-
-case class DoubleMetaphoneAlternateExpr(child: Expression) extends StringUnaryPhonetic {
-  override def method: String = "doubleMetaphoneAlternate"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.doubleMetaphoneAlternate(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_double_metaphone_alternate"
-}
-
-/** NYSIIS with a strict flag folded in at plan time. */
-case class NysiisExpr(child: Expression, strict: Boolean)
-    extends StringUnaryPhonetic {
-  override def method: String = "nysiis"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.nysiis(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], strict)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${Gen.F}.nysiis($c, $strict)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_nysiis"
-}
-
-case class PhonexExpr(child: Expression, maxCodeLength: Int)
-    extends StringUnaryPhonetic {
-  override def method: String = "phonex"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.phonex(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], maxCodeLength)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${Gen.F}.phonex($c, $maxCodeLength)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_phonex"
-}
-
-case class MetaphoneExpr(child: Expression, maxCodeLength: Int)
-    extends StringUnaryPhonetic {
-  override def method: String = "metaphone"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.metaphone(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], maxCodeLength)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${Gen.F}.metaphone($c, $maxCodeLength)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_metaphone"
-}
-
-/** Double Metaphone as array<string> [primary, alternate] — exploded for
-  * multi-block membership per the north rule.
-  */
-case class DoubleMetaphoneExpr(child: Expression, maxCodeLength: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    PhoneticFunctions.doubleMetaphone(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], maxCodeLength)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${Gen.F}.doubleMetaphone($c, $maxCodeLength)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_double_metaphone"
-}
-
-/** Daitch-Mokotoff branching codes as array<string>. */
-case class DmSoundexExpr(child: Expression)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    PhoneticFunctions.dmSoundex(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${Gen.F}.dmSoundex($c)")
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_dm_soundex"
-}
-
-/** Beider-Morse full encoding: `|`-joined phoneme alternatives, prefix
-  * groups as `(a|b)-(c|d)` (ref: /root/reference/src/beider_morse/mod.rs:209-221).
-  * Options are folded in at plan time.
-  */
-case class BeiderMorseExpr(child: Expression, nameType: String,
-    ruleType: String, concat: Boolean, maxPhonemes: Int)
-    extends StringUnaryPhonetic {
-  override def method: String = "beiderMorse"
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.beiderMorse(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      org.apache.spark.unsafe.types.UTF8String.fromString(nameType),
-      org.apache.spark.unsafe.types.UTF8String.fromString(ruleType),
-      concat, maxPhonemes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nt = ctx.addReferenceObj("bmNameType",
-      org.apache.spark.unsafe.types.UTF8String.fromString(nameType))
-    val rt = ctx.addReferenceObj("bmRuleType",
-      org.apache.spark.unsafe.types.UTF8String.fromString(ruleType))
-    defineCodeGen(ctx, ev, c =>
-      s"${Gen.F}.beiderMorse($c, $nt, $rt, $concat, $maxPhonemes)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_beider_morse"
-}
-
-/** Beider-Morse phoneme alternatives flattened to array<string> for
-  * explode() multi-block membership (north rule).
-  */
-case class BmCodesExpr(child: Expression, nameType: String,
-    ruleType: String, concat: Boolean, maxPhonemes: Int)
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${child.dataType}")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    PhoneticFunctions.bmCodes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      org.apache.spark.unsafe.types.UTF8String.fromString(nameType),
-      org.apache.spark.unsafe.types.UTF8String.fromString(ruleType),
-      concat, maxPhonemes)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nt = ctx.addReferenceObj("bmNameType",
-      org.apache.spark.unsafe.types.UTF8String.fromString(nameType))
-    val rt = ctx.addReferenceObj("bmRuleType",
-      org.apache.spark.unsafe.types.UTF8String.fromString(ruleType))
-    defineCodeGen(ctx, ev, c =>
-      s"${Gen.F}.bmCodes($c, $nt, $rt, $concat, $maxPhonemes)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_bm_codes"
-}
-
-abstract class StringBinaryPhonetic extends BinaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
+    if (children.forall(_.dataType == StringType))
       TypeCheckResult.TypeCheckSuccess
+    else if (children.length == 1)
+      TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a string argument, got ${children.head.dataType}")
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires string arguments, got " +
-        s"(${left.dataType}, ${right.dataType})")
-  def method: String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"${Gen.F}.$method($a, $b)")
-}
+        children.map(_.dataType).mkString("(", ", ", ")"))
 
-/** Fused pairwise scoring: every feature of [[graft.pipeline.Scoring]] in
-  * one evaluation (strings converted once, MRA encodes shared). Field
-  * order: jaro_winkler, lev, mra_match, mra_rating, metaphone_eq,
-  * soundex_diff.
-  */
-case class ScoreFeaturesExpr(left: Expression, right: Expression)
-    extends StringBinaryPhonetic {
-  override def method: String = "scoreFeatures"
-  override def dataType: DataType = StructType(Seq(
-    StructField("jaro_winkler", DoubleType, nullable = false),
-    StructField("lev", IntegerType, nullable = false),
-    StructField("mra_match", BooleanType, nullable = false),
-    StructField("mra_rating", IntegerType, nullable = false),
-    StructField("metaphone_eq", BooleanType, nullable = false),
-    StructField("soundex_diff", IntegerType, nullable = false)))
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PhoneticFunctions.scoreFeatures(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_score_features"
-}
+  // resolved once per plan copy, as Spark's StaticInvoke does
+  @transient private lazy val staticMethod: Method =
+    Class.forName(target).getMethods.filter(m =>
+      m.getName == method && Modifier.isStatic(m.getModifiers) &&
+        m.getParameterCount == children.length + options.length) match {
+      case Array(m) => m
+      case ms => throw new IllegalStateException(
+        s"$prettyName: expected one static $target.$method, found ${ms.length}")
+    }
 
-/** MRA similarity-rating comparator (ref:
-  * /root/reference/src/match_rating_approach.rs:202-228) — the pairwise
-  * scoring predicate applied post-blocking.
-  */
-case class MraMatchExpr(left: Expression, right: Expression)
-    extends StringBinaryPhonetic {
-  override def method: String = "mraMatch"
-  override def dataType: DataType = BooleanType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PhoneticFunctions.mraMatch(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_mra_match"
-}
+  /** The option values as the method takes them. */
+  @transient private lazy val optionArgs: Array[AnyRef] =
+    options.zip(staticMethod.getParameterTypes.drop(children.length)).map {
+      case (s: String, t) if t == classOf[UTF8String] => UTF8String.fromString(s)
+      case (s: String, t) if t != classOf[String] =>
+        t.getConstructor(classOf[String]).newInstance(s).asInstanceOf[AnyRef]
+      case (v, _) => v.asInstanceOf[AnyRef]
+    }.toArray
 
-case class MraRatingExpr(left: Expression, right: Expression)
-    extends StringBinaryPhonetic {
-  override def method: String = "mraRating"
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PhoneticFunctions.mraRating(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_mra_rating"
-}
-
-/** `is_double_metaphone_equal(a, b, alternate)` with the alternate flag
-  * folded at plan time (ref: /root/reference/src/double_metaphone.rs:208-216).
-  */
-case class DoubleMetaphoneEqualExpr(left: Expression, right: Expression,
-    alternate: Boolean) extends StringBinaryPhonetic {
-  override def method: String = "doubleMetaphoneEqual"
-  override def dataType: DataType = BooleanType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PhoneticFunctions.doubleMetaphoneEqual(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], alternate)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"${Gen.F}.doubleMetaphoneEqual($a, $b, $alternate)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_double_metaphone_equal"
-}
-
-/** Beider-Morse language guess as a sorted '|'-joined column
-  * (ref: /root/reference/src/beider_morse/lang.rs:44-64).
-  */
-case class BmGuessLangExpr(child: Expression, nameType: String)
-    extends StringUnaryPhonetic {
-  override def method: String = "bmGuessLang"
-  private val ntU8 =
-    org.apache.spark.unsafe.types.UTF8String.fromString(nameType)
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.bmGuessLang(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], ntU8)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nt = ctx.addReferenceObj("bmNameType", ntU8)
-    defineCodeGen(ctx, ev, c => s"${Gen.F}.bmGuessLang($c, $nt)")
+  override def eval(input: InternalRow): Any = {
+    val args = new Array[AnyRef](children.length + optionArgs.length)
+    var i = 0
+    while (i < children.length) {
+      val v = children(i).eval(input)
+      if (v == null) return null
+      args(i) = v.asInstanceOf[AnyRef]
+      i += 1
+    }
+    System.arraycopy(optionArgs, 0, args, children.length, optionArgs.length)
+    try staticMethod.invoke(null, args: _*)
+    catch { case e: InvocationTargetException if e.getCause != null => throw e.getCause }
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_bm_guess_lang"
-}
 
-/** Beider-Morse `encode_with_languages` — the language restriction (a csv
-  * literal) and options folded at plan time
-  * (ref: /root/reference/src/beider_morse/mod.rs:275-277).
-  */
-case class BmEncodeWithLangsExpr(child: Expression, nameType: String,
-    ruleType: String, concat: Boolean, maxPhonemes: Int, languagesCsv: String)
-    extends StringUnaryPhonetic {
-  override def method: String = "bmEncodeWithLangs"
-  private def u8(s: String) =
-    org.apache.spark.unsafe.types.UTF8String.fromString(s)
-  override protected def evalString(input: Any): Any =
-    PhoneticFunctions.bmEncodeWithLangs(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      u8(nameType), u8(ruleType), concat, maxPhonemes, u8(languagesCsv))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val nt = ctx.addReferenceObj("bmNameType", u8(nameType))
-    val rt = ctx.addReferenceObj("bmRuleType", u8(ruleType))
-    val ls = ctx.addReferenceObj("bmLangs", u8(languagesCsv))
-    defineCodeGen(ctx, ev, c =>
-      s"${Gen.F}.bmEncodeWithLangs($c, $nt, $rt, $concat, $maxPhonemes, $ls)")
+    val inputs = children.map(_.genCode(ctx))
+    val opts = options.zip(optionArgs).map {
+      case (v: Int, _) => v.toString
+      case (v: Boolean, _) => v.toString
+      case (_, ref) => ctx.addReferenceObj(method, ref)
+    }
+    val call = s"$target.$method(" +
+      (inputs.map(_.value.toString) ++ opts).mkString(", ") + ")"
+    val javaType = CodeGenerator.javaType(dataType)
+    if (nullable) {
+      val body = inputs.zip(children).foldRight(
+        s"${ev.isNull} = false;\n${ev.value} = $call;") {
+        case ((in, c), inner) =>
+          s"${in.code}\n${ctx.nullSafeExec(c.nullable, in.isNull)(inner)}"
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        $body""")
+    } else ev.copy(code = code"""
+        ${inputs.map(_.code.toString).mkString("\n")}
+        $javaType ${ev.value} = $call;""", isNull = FalseLiteral)
   }
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-  override def prettyName: String = "graft_bm_encode_langs"
-}
 
-/** SoundexCommons::difference (ref: /root/reference/src/lib.rs:294-310). */
-case class SoundexDifferenceExpr(left: Expression, right: Expression)
-    extends StringBinaryPhonetic {
-  override def method: String = "soundexDifference"
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PhoneticFunctions.soundexDifference(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_soundex_difference"
-}
-
-case class RefinedSoundexDifferenceExpr(left: Expression, right: Expression)
-    extends StringBinaryPhonetic {
-  override def method: String = "refinedSoundexDifference"
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PhoneticFunctions.refinedSoundexDifference(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_refined_soundex_difference"
-}
-
-case class JaroWinklerExpr(left: Expression, right: Expression)
-    extends StringBinaryPhonetic {
-  override def method: String = "jaroWinkler"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PhoneticFunctions.jaroWinkler(
-      a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "graft_jaro_winkler"
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
 }

@@ -48,10 +48,10 @@ object Dedup {
       .select("id", "canonical_id", "group_size")
   }
 
-  /** MinHash signature — single-pass custom expression (see
-    * graft.functions.MinHashSignatureExpr): the declarative
-    * transform/array_min formulation re-runs the tokenizer inside
-    * interpreted lambdas, O(numHashes x shingles) regex runs per row.
+  /** MinHash signature — the single-pass SQL function
+    * `graft_minhash_signature` (see graft.functions.MinHashFunctions): the
+    * declarative transform/array_min formulation re-runs the tokenizer
+    * inside interpreted lambdas, O(numHashes x shingles) regex runs per row.
     */
   def minhashSignature(text: Column, numHashes: Int = 64, k: Int = 3): Column =
     graft.functions.MinHash.signature(text, numHashes, k)

@@ -86,8 +86,8 @@ object TextAnalysis {
     org.apache.spark.unsafe.types.UTF8String.fromString(
       langIdOf(u.toString, minHits))
 
-  /** struct(lang, hits) entry point for [[graft.functions.LangIdScoredExpr]]
-    * codegen: the floored guess plus the raw best-signature hit count, so a
+  /** struct(lang, hits) entry point for `graft_langid_scored`'s codegen:
+    * the floored guess plus the raw best-signature hit count, so a
     * routing pass can both filter on confidence and keep the evidence.
     */
   def langIdScored(
@@ -133,7 +133,7 @@ object TextAnalysis {
   }
 
   /** struct(lang, hits): the floored guess plus its raw hit count —
-    * declarative mirror of [[graft.functions.LangIdScoredExpr]].
+    * declarative mirror of the SQL function `graft_langid_scored`.
     */
   def langIdScoredCol(text: Column, minHits: Int = 1): Column = {
     val best = bestSignatureCol(text)

@@ -7,12 +7,12 @@ import graft.functions.GraftFunctions._
 
 /** Pairwise scoring of candidate pairs.
   *
-  * Feature columns (all codegen'd Catalyst expressions / built-ins, no
-  * UDFs): Jaro-Winkler, Levenshtein (built-in), the MRA similarity-rating
-  * decision + rating, Metaphone equality, Soundex difference. The edge
-  * decision replicates the reference comparators: identical tokens, an MRA
-  * match (match_rating_approach.rs:202-228), or Metaphone code equality
-  * (`is_encoded_equals`, lib.rs:226-231).
+  * Feature columns, all fields of the one codegen'd `graft_score_features`
+  * call (no UDFs): Jaro-Winkler, Levenshtein ([[graft.phonetic.Levenshtein]]),
+  * the MRA similarity-rating decision + rating, Metaphone equality, Soundex
+  * difference. The edge decision replicates the reference comparators:
+  * identical tokens, an MRA match (match_rating_approach.rs:202-228), or
+  * Metaphone code equality (`is_encoded_equals`, lib.rs:226-231).
   */
 object Scoring {
 

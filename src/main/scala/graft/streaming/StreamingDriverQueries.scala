@@ -109,10 +109,15 @@ object StreamingDriverQueries {
   private val nameCounter = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Drive `build`'s streaming output through a memory sink for the given
-    * micro-batches and return the sink rows as a local DataFrame (the
-    * results are tiny by construction). The sink table is dropped before
-    * returning so repeat invocations (bench warm + timed runs) never
-    * collide.
+    * micro-batches and return the sink rows as a local DataFrame on
+    * `spark` (the results are tiny by construction). The sink table is
+    * dropped before returning so repeat invocations (bench warm + timed
+    * runs) never collide.
+    *
+    * The query runs in a session of its own (`spark.newSession()`: the
+    * same SparkContext, its own SQL conf), so the fixture's settings never
+    * reach other queries on `spark`, and `spark`'s streaming listeners are
+    * added to it so they still see its micro-batches.
     */
   private def runBatches(
       spark: SparkSession,
@@ -120,18 +125,13 @@ object StreamingDriverQueries {
       strCol: String,
       batches: Seq[Seq[(Long, String, Long)]])(
       build: DataFrame => DataFrame): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(Long, String, Long)]
-    val name = s"graft_stream_q_${nameCounter.incrementAndGet()}"
-    val out = build(input.toDS().toDF(idCol, strCol, "event_sec"))
+    val session = spark.newSession()
     // a few-row fixture does not need 32 state-store partitions — every
     // stateful-op partition costs a task + a store commit PER MICRO-BATCH,
     // which at the session default dominated the query's wall time ~8x.
     // (Real deployments size this to their ingest rate; the semantics
     // under test are partition-count independent.)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    session.conf.set("spark.sql.shuffle.partitions", "1")
     // NOTE: no-data micro-batches must stay ON — they are where the
     // engine lands the watermark advance, so removing them runs the next
     // DATA batch against a stale watermark (measured on this fixture:
@@ -142,10 +142,15 @@ object StreamingDriverQueries {
     // durable checkpoints) double the WAL file writes per micro-batch;
     // this checkpoint is single-use scratch that is deleted on return,
     // so they buy nothing here.
-    val prevCksum = spark.conf
-      .get("spark.sql.streaming.checkpoint.fileChecksum.enabled")
-    spark.conf
+    session.conf
       .set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+    graft.functions.GraftFunctions.register(session)
+    spark.streams.listListeners().foreach(session.streams.addListener)
+    import session.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
+    val input = MemoryStream[(Long, String, Long)]
+    val name = s"graft_stream_q_${nameCounter.incrementAndGet()}"
+    val out = build(input.toDS().toDF(idCol, strCol, "event_sec"))
     // ephemeral checkpoint on tmpfs: the offset/commit WALs and the state
     // store's per-batch delta files are scratch for this in-memory
     // fixture (a real deployment points this at durable storage), and
@@ -158,11 +163,6 @@ object StreamingDriverQueries {
           java.nio.file.Files.isWritable(shm))
         Some(java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_"))
       else None
-    // the overrides are restored only after the query is fully stopped
-    // (the stream captures settings during micro-batch planning, which
-    // runs asynchronously after start()) — and on EVERY exit path,
-    // including start() itself throwing, so a failed streaming query can
-    // never leak the overrides into the rest of the session
     try {
       var writer = out.writeStream
         .format("memory").queryName(name).outputMode("append")
@@ -174,18 +174,15 @@ object StreamingDriverQueries {
           input.addData(b: _*)
           query.processAllAvailable()
         }
-        val table = spark.table(name)
+        val table = session.table(name)
         val rows: Seq[Row] = table.collect().toSeq
         spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), table.schema)
       } finally {
         query.stop()
-        spark.catalog.dropTempView(name)
+        session.catalog.dropTempView(name)
       }
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set(
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled", prevCksum)
       ckpt.foreach { p =>
         import scala.jdk.CollectionConverters._
         java.nio.file.Files.walk(p).iterator().asScala.toSeq
@@ -228,7 +225,7 @@ object StreamingDriverQueries {
   def linkage(spark: SparkSession): DataFrame = {
     val edges = runBatches(
       spark, "file_id", "token", tokenBatches)(df =>
-      StreamingLinkage.edgesWithTime(spark, df,
+      StreamingLinkage.edgesWithTime(df.sparkSession, df,
         stateTtl = java.time.Duration.ofSeconds(TtlSeconds),
         eventTimeCol = Some("event_sec")).toDF())
     edges.select("src", "dst").dropDuplicates("src", "dst")

@@ -188,6 +188,37 @@ class GraftFunctionsSpec extends AnyFunSuite {
       e3.getMessage.contains("arguments"), e3.getMessage)
   }
 
+  test("bad option values fail at analysis, naming the parameter") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(Seq(StructField("a", StringType))))
+    empty.createOrReplaceTempView("optcheck")
+    // (function, option arguments after the string column, parameter)
+    val cases = Seq(
+      ("graft_beider_morse", Seq("bogus"), "nameType"),
+      ("graft_bm_codes", Seq("gen", "fuzzy"), "ruleType"),
+      ("graft_bm_guess_lang", Seq("bogus"), "nameType"),
+      ("graft_bm_encode_langs", Seq("bogus", "exact", true, 20, "italian"),
+        "nameType"),
+      ("graft_soundex_mapping", Seq("abc"), "mapping"),
+      ("graft_phonex", Seq(-1), "maxLen"))
+    cases.foreach { case (fn, opts, param) =>
+      val sqlArgs = opts.map {
+        case s: String => s"'$s'"
+        case v => v.toString
+      }
+      val viaSql = intercept[Exception](
+        spark.sql(s"SELECT $fn(a, ${sqlArgs.mkString(", ")}) FROM optcheck"))
+      val viaColumn = intercept[Exception](
+        empty.select(call_function(fn, col("a") +: opts.map(lit): _*)))
+      Seq(viaSql, viaColumn).foreach { e =>
+        assert(e.getMessage.contains(s"option argument '$param'"),
+          s"$fn: ${e.getMessage}")
+      }
+    }
+  }
+
   test("GraftExtensions injects functions via spark.sql.extensions") {
     // the extensions deployment path: no register() call — the session is
     // built with GraftExtensions applied (spark.sql.extensions is a
@@ -204,6 +235,10 @@ class GraftFunctionsSpec extends AnyFunSuite {
       val code = s2.sql("SELECT graft_soundex('Washington')")
         .head().getString(0)
       assert(code == "W252")
+      // the usage text is what DESCRIBE FUNCTION shows
+      assert(s2.catalog.getFunction("graft_soundex").description ==
+        "graft_soundex(str) - American Soundex (commons-codec semantics " +
+          "incl. H/W rule)")
     } finally {
       SparkSession.setActiveSession(spark)
       SparkSession.setDefaultSession(spark)
