@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * it stays inside whole-stage codegen: `doGenCode` emits a direct call of
   * the static method `target.method(strings..., options...)` (no ScalaUDF
   * boxing, no CodegenFallback). The reference's `Encoder.encode` maps 1:1
-  * onto these calls (ref: /root/reference/src/lib.rs:180-232).
+  * onto these calls (ref: rphonetic src/lib.rs:180-232).
   *
   * `options` are the call's plan-time literals as plain values (Int,
   * Boolean, String), so equal calls compare equal. Int and Boolean options
