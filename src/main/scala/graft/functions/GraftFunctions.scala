@@ -37,7 +37,13 @@ object GraftFunctions {
       if (v == null)
         throw new IllegalArgumentException(
           s"option argument '$name' must not be NULL")
-      val x = read(v)
+      val x =
+        try read(v)
+        catch {
+          case _: ClassCastException =>
+            throw new IllegalArgumentException(
+              s"option argument '$name' has the wrong type, got: ${e.sql}")
+        }
       try check(x)
       catch {
         case err: IllegalArgumentException =>

@@ -202,7 +202,9 @@ class GraftFunctionsSpec extends AnyFunSuite {
       ("graft_bm_encode_langs", Seq("bogus", "exact", true, 20, "italian"),
         "nameType"),
       ("graft_soundex_mapping", Seq("abc"), "mapping"),
-      ("graft_phonex", Seq(-1), "maxLen"))
+      ("graft_phonex", Seq(-1), "maxLen"),
+      ("graft_metaphone", Seq("6"), "maxLen"),
+      ("graft_nysiis", Seq(1), "strict"))
     cases.foreach { case (fn, opts, param) =>
       val sqlArgs = opts.map {
         case s: String => s"'$s'"
