@@ -3,1223 +3,57 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.driver._
 import graft.functions.GraftFunctions
-import graft.functions.GraftFunctions._
-import graft.goldens.Goldens
-import graft.ops.{Dedup, Multimodal, SimilaritySearch, TextAnalysis}
-import graft.pipeline.{LinkagePipeline, RepoFiles, Tokenizer}
-import graft.pipeline.LinkagePipeline.InMemory
+import graft.pipeline.RepoFiles
+import graft.streaming.StreamingDriverQueries
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` exposes one entry per implemented operator (SURVEY.md §2 plus
-  * the training-data ops). Every phonetic operator query encodes the
-  * reference's OWN golden test vectors ([[graft.goldens.Goldens]], ported
-  * from /root/reference test fixtures) and its `oracleSql` is a
-  * VALUES-literal table of the reference-expected codes — so a driver hash
-  * match proves bit-exactness against the reference per operator, through
-  * an independent engine (DuckDB). Engine-relational and text-analysis
-  * queries have semantically equivalent DuckDB SQL oracles.
+  * the training-data ops), and `oracleSql` the DuckDB SQL that recomputes
+  * each one's result independently. Both are read from the [[DriverQuery]]
+  * rows of the families below, where each query is defined once, beside
+  * its oracle.
   */
 object SparkEntry {
 
-  private def reg(s: SparkSession): SparkSession = {
-    GraftFunctions.register(s); s
-  }
-
-  /** Table schemas inferred once per path and then passed explicitly —
-    * the catalog role a metastore plays for a real table. Without it
-    * EVERY `spark.read.parquet` call re-opens a footer to re-infer the
-    * (immutable) schema, driver-side, on the timed path of every query.
-    * Metadata only — no data or results are retained.
+  /** The driver queries by family: which part of the library each one
+    * exercises.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  val families: Seq[(String, Seq[DriverQuery])] = Seq(
+    "tpch" -> TpchQueries.queries,
+    "text" -> TextQueries.queries,
+    "goldens" -> GoldenQueries.queries,
+    "dedup" -> DedupQueries.queries,
+    "ann" -> AnnQueries.queries,
+    "multimodal" -> MultimodalQueries.queries,
+    "streaming" -> StreamingDriverQueries.queries,
+    "pipeline" -> PipelineQueries.queries)
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => s.read.parquet(p).schema)
-    s.read.schema(schema).parquet(path)
-  }
-
-  /** Scale-adaptive partition count for the synthetic fixture
-    * generators: ~250 rows per task keeps each task's work above its
-    * scheduling overhead (a 1000-row fixture otherwise fans into
-    * defaultParallelism near-empty tasks at EVERY narrow stage derived
-    * from it), while any fixture >= 250 x defaultParallelism rows gets
-    * the full core count — so nothing changes at real scale.
-    */
-  private def genParts(s: SparkSession, nFiles: Long): Int =
-    math.max(1L, math.min(
-      s.sparkContext.defaultParallelism.toLong, nFiles / 250)).toInt
-
-  /** Single-use scratch directory for the checkpoint-fixture queries,
-    * on tmpfs when available: the fixtures create, exercise and DELETE a
-    * TableIO root within one query, so putting that scratch on the
-    * (disk-backed) java tmpdir only adds unrelated I/O latency to the
-    * timed path. Durability semantics under test (atomic rename, commit
-    * manifests, staleness tokens) are filesystem-agnostic — TableIO goes
-    * through the Hadoop FileSystem API either way.
-    */
-  private def scratchDir(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    else java.nio.file.Files.createTempDirectory(prefix)
-  }
-
-  /** Golden-fixture DataFrames ride a SINGLE-partition RDD, not a
-    * LocalRelation: `Seq.toDF` parallelizes to defaultParallelism tasks
-    * (32 near-empty tasks per sub-hundred-row fixture — pure scheduling
-    * overhead), and a deterministic projection over a LocalRelation is
-    * additionally folded DRIVER-side by ConvertToLocalRelation, so the
-    * encoder expressions would not even run as a distributed job. One
-    * task per fixture, encoders on executors (same rows either way).
-    */
-  private def tokensDf(s: SparkSession, tokens: Seq[String]): DataFrame = {
-    import s.implicits._
-    tokens.toDF("token").coalesce(1)
-  }
-
-  private def pairsDf(s: SparkSession, pairs: Seq[(String, String)]): DataFrame = {
-    import s.implicits._
-    pairs.toDF("token_a", "token_b").coalesce(1)
-  }
-
-  /** Golden-vector unary-encoder query: encode the reference's own test
-    * inputs, output (token, code).
-    */
-  private def goldenUnary(s: SparkSession, vectors: Seq[(String, String)],
-      fn: String): DataFrame = {
-    reg(s)
-    tokensDf(s, vectors.map(_._1))
-      .select(col("token"), call_function(fn, col("token")).as("code"))
-  }
-
-  /** DuckDB language-ID oracle generated from the SAME stopword table the
-    * Spark heuristic uses ([[TextAnalysis.StopwordSignatures]]) so the two
-    * cannot drift. Tie-break mirrors Spark's `greatest` over (hits, lang)
-    * structs: maximum hits, then lexicographically greatest language.
-    */
-  private def langIdOracleSql: String = {
-    val sigs = TextAnalysis.StopwordSignatures.toSeq.sortBy(_._1)
-    val scoreCols = sigs.map { case (lang, words) =>
-      words.map(w => s"(len(string_split(p, ${Goldens.sqlStr(w)}))-1)")
-        .mkString(" + ") + s" AS $lang"
-    }
-    val langs = sigs.map(_._1)
-    val g = s"greatest(${langs.mkString(",")})"
-    val cases = langs.sorted.reverse.dropRight(1)
-      .map(l => s"WHEN $l = $g THEN '$l'").mkString(" ")
-    val fallback = langs.sorted.head
-    s"""WITH padded AS (SELECT ' ' || lower(text) || ' ' AS p FROM documents),
-       |scores AS (SELECT p IS NULL AS no_text,
-       |  ${scoreCols.mkString(",\n  ")} FROM padded)
-       |SELECT lang_guess, count(*) AS cnt FROM (
-       |  SELECT CASE WHEN no_text THEN NULL
-       |    WHEN $g <= 0 THEN 'und' $cases
-       |    ELSE '$fallback' END AS lang_guess
-       |  FROM scores) GROUP BY 1""".stripMargin
-  }
-
-  /** Per-document (guess, hits) langid oracle with the confidence floor:
-    * hits below `minHits` route to 'und', the raw hit count is kept.
-    */
-  private def langIdScoredOracleSql(minHits: Int): String = {
-    val sigs = TextAnalysis.StopwordSignatures.toSeq.sortBy(_._1)
-    val scoreCols = sigs.map { case (lang, words) =>
-      words.map(w => s"(len(string_split(p, ${Goldens.sqlStr(w)}))-1)")
-        .mkString(" + ") + s" AS $lang"
-    }
-    val langs = sigs.map(_._1)
-    val g = s"greatest(${langs.mkString(",")})"
-    val cases = langs.sorted.reverse.dropRight(1)
-      .map(l => s"WHEN $l = $g THEN '$l'").mkString(" ")
-    val fallback = langs.sorted.head
-    s"""WITH padded AS (
-       |  SELECT doc_id, ' ' || lower(text) || ' ' AS p FROM documents),
-       |scores AS (SELECT doc_id, p IS NULL AS no_text,
-       |  ${scoreCols.mkString(",\n  ")} FROM padded)
-       |SELECT doc_id,
-       |  CASE WHEN no_text THEN NULL
-       |    WHEN $g < $minHits THEN 'und' $cases
-       |    ELSE '$fallback' END AS lang_guess,
-       |  CASE WHEN no_text THEN NULL ELSE $g END AS lang_hits
-       |FROM scores""".stripMargin
-  }
-
-  /** DuckDB MinHash oracle: recomputes the portable md5-based spec of
-    * [[graft.functions.MinHashFunctions]] (same tokens, shingles, base
-    * hash and (a,b) coefficients) over all pairs, then applies the same
-    * band test and est-Jaccard threshold as `q_minhash_dedup`. Parameters
-    * must match the query (numHashes=32, bands=8, k=3, threshold 0.5).
-    */
-  private def minhashOracleSql: String =
-    minhashOracleSqlOver("documents", streamingRules = false)
-
-  /** DuckDB oracle for `q_neardup_clusters`: the MinHash pair oracle's
-    * edges, transitively closed with a recursive CTE (undirected label
-    * propagation — each doc's cluster_id is the min doc_id reachable
-    * through near-dup edges, exactly what min-label CC converges to),
-    * then the same representative rule (longest text, ties to lowest id;
-    * null text ranks as -1) recomputed relationally.
-    */
-  private def nearDupClustersOracleSql: String =
-    s"""WITH RECURSIVE
-       |pairs AS (${minhashOracleSql.replace("\n", "\n  ")}),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |  UNION ALL SELECT id_b, id_a FROM pairs),
-       |reach(id, lab) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT e.dst, r.lab FROM reach r JOIN edges e ON e.src = r.id),
-       |labels AS (SELECT id AS doc_id, min(lab) AS cluster_id
-       |  FROM reach GROUP BY id),
-       |ranked AS (SELECT l.doc_id, l.cluster_id,
-       |    coalesce(length(d.text), -1) AS tlen
-       |  FROM labels l JOIN documents d USING (doc_id)),
-       |mx AS (SELECT cluster_id, max(tlen) AS mlen
-       |  FROM ranked GROUP BY cluster_id),
-       |rep AS (SELECT r.cluster_id, min(r.doc_id) AS rep_id
-       |  FROM ranked r JOIN mx USING (cluster_id)
-       |  WHERE r.tlen = mx.mlen GROUP BY r.cluster_id)
-       |SELECT r.doc_id AS id, r.cluster_id,
-       |  (r.doc_id = rep.rep_id) AS keep
-       |FROM ranked r JOIN rep USING (cluster_id)""".stripMargin
-
-  /** The minhash pair oracle parameterized over its source relation:
-    * `documents` for the batch op; a VALUES literal of the streaming
-    * fixture (with batch + event-time columns and `streamingRules`) for
-    * the streaming op.
-    *
-    * Streaming rules are the EXACT declarative mirror of
-    * [[graft.streaming.StreamingDedup.nearDupCandidates]]'s per-(band,
-    * bucket) state machine: per-row watermark = max prior-batch event
-    * time (delay 0); late rows contribute nothing; a member m links to
-    * a later arrival v iff some band's bucket they share kept m's
-    * membership ALIVE through every batch n in (m.batch, v.batch] —
-    * i.e. no n where wm_n > max(ts of non-late co-bucketed rows in
-    * batches < n) + TTL (that inequality is exactly the read-time /
-    * timeout eviction, and rows of an already-dead bucket incarnation
-    * can never mask a break because their ts + TTL is below the
-    * watermark at their own death). Same-batch co-bucketed pairs always
-    * link (the earlier fixture row is in `members` when the later one
-    * processes). The implementation buckets by xxhash64(slice); the
-    * oracle compares slices directly — identical partitioning absent a
-    * 64-bit hash collision inside a fixture.
-    */
-  private def minhashOracleSqlOver(
-      docsFrom: String, streamingRules: Boolean): String = {
-    import graft.functions.MinHashFunctions.{coeffA, coeffB, M61}
-    import graft.streaming.StreamingDriverQueries.TtlSeconds
-    val numHashes = 32; val bands = 8; val rows = numHashes / bands
-    val bcol = if (streamingRules) ", batch, ts, wm" else ""
-    val sigTerms = (0 until numHashes).map(i =>
-      s"list_min(list_transform(hv, h -> ((${coeffA(i)}::HUGEINT * h + " +
-        s"${coeffB(i)}) % $M61)::BIGINT))")
-      .mkString("[\n  ", ",\n  ", "\n  ]")
-    def bandCheck(x: String, y: String): String =
-      (0 until bands).map(b =>
-        s"($x[${b * rows + 1}:${b * rows + rows}] = " +
-          s"$y[${b * rows + 1}:${b * rows + rows}])").mkString("(", " OR ", ")")
-    val agree = s"len(list_filter(range(1, ${numHashes + 1}), " +
-      s"i -> sa[i] = sb[i]))::DOUBLE / $numHashes"
-    val srcCtes =
-      if (!streamingRules) ""
-      else
-        s"""docsrc AS (SELECT * FROM $docsFrom),
-           |wms AS (SELECT d.*,
-           |    coalesce((SELECT max(p.ts) FROM docsrc p
-           |      WHERE p.batch < d.batch), -9223372036854775807) AS wm
-           |  FROM docsrc d),
-           |bwm AS (SELECT batch, max(wm) AS wm FROM wms GROUP BY batch),
-           |""".stripMargin
-    val src = if (streamingRules) "(SELECT * FROM wms WHERE ts >= wm)" else docsFrom
-    val shared =
-      s"""${srcCtes}docs AS (SELECT doc_id$bcol,
-         |    regexp_extract_all(lower(text),
-         |      '${graft.functions.Tokens.TokenPatternRe2}') AS words
-         |  FROM $src),
-         |sh AS (SELECT doc_id$bcol,
-         |    CASE WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-         |    ELSE list_transform(range(0, len(words)-2),
-         |      i -> array_to_string(words[i+1:i+3], ' ')) END AS shingles
-         |  FROM docs),
-         |hs AS (SELECT doc_id$bcol, list_transform(shingles,
-         |    s -> ('0x' || substring(md5(s), 1, 15))::BIGINT) AS hv FROM sh),
-         |sig AS (SELECT doc_id$bcol, $sigTerms AS sg FROM hs)""".stripMargin
-    if (!streamingRules)
-      s"""WITH $shared,
-         |cand AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    a.sg AS sa, b.sg AS sb
-         |  FROM sig a JOIN sig b ON a.doc_id < b.doc_id)
-         |SELECT id_a, id_b, round($agree, 6) AS est_jaccard
-         |FROM cand WHERE ${bandCheck("sa", "sb")}
-         |  AND round($agree, 6) >= 0.5""".stripMargin
-    else {
-      val bandedSel = (0 until bands).map(b =>
-        s"SELECT doc_id, batch, ts, sg, $b AS band, " +
-          s"sg[${b * rows + 1}:${b * rows + rows}] AS bkt FROM sig")
-        .mkString("\nUNION ALL\n")
-      s"""WITH $shared,
-         |banded AS ($bandedSel),
-         |pairs AS (SELECT m.doc_id AS id_m, v.doc_id AS id_v,
-         |    m.sg AS sa, v.sg AS sb, m.batch AS mb, v.batch AS vb,
-         |    m.band AS band, m.bkt AS bkt
-         |  FROM banded m JOIN banded v
-         |    ON m.band = v.band AND m.bkt = v.bkt
-         |   AND m.doc_id <> v.doc_id
-         |   AND (m.batch < v.batch
-         |     OR (m.batch = v.batch AND m.doc_id < v.doc_id)))
-         |SELECT DISTINCT least(id_m, id_v) AS id_a,
-         |  greatest(id_m, id_v) AS id_b,
-         |  round($agree, 6) AS est_jaccard
-         |FROM pairs c
-         |WHERE round($agree, 6) >= 0.5
-         |  AND NOT EXISTS (SELECT 1 FROM bwm n
-         |    WHERE n.batch > c.mb AND n.batch <= c.vb
-         |      AND n.wm > (SELECT max(r.ts) FROM banded r
-         |        WHERE r.band = c.band AND r.bkt = c.bkt
-         |          AND r.batch < n.batch) + $TtlSeconds)""".stripMargin
-    }
-  }
-
-  /** VALUES literal of the streaming fixture docs with their micro-batch
-    * index and event time, shared by the streaming dedup/near-dup
-    * oracles.
-    */
-  private def streamingDocsValues: String = {
-    import graft.streaming.StreamingDriverQueries.docBatches
-    docBatches.zipWithIndex.flatMap { case (b, i) =>
-      b.map { case (id, t, ts) =>
-        s"($id, ${i + 1}, $ts, ${Goldens.sqlStr(t)})"
-      }
-    }.mkString(", ")
-  }
-
-  private def streamingDocsFrom: String =
-    s"(VALUES $streamingDocsValues) AS docsrc(doc_id, batch, ts, text)"
-
-  /** DuckDB recompute of streaming exact dedup under full event-time
-    * semantics: per-row watermark = max prior-batch event time minus the
-    * TTL delay; LATE rows (ts below watermark) are dropped outright; a
-    * non-late row survives iff no same-fingerprint row arrived in an
-    * earlier batch whose dedup state is still live (its newest arrival's
-    * event time + TTL has not been passed by the watermark — arrivals
-    * extend expiry, so the in-window duplicate doc 4 extends doc 1's
-    * state, and the post-TTL revisit doc 7 passes through). Fingerprint =
-    * the same md5(whitespace-collapsed lowercase) column as batch
-    * `q_fingerprint`.
-    */
-  private def streamingDedupOracleSql: String = {
-    import graft.streaming.StreamingDriverQueries.TtlSeconds
-    s"""WITH docsrc AS (SELECT * FROM $streamingDocsFrom),
-       |wms AS (SELECT d.*,
-       |    coalesce((SELECT max(p.ts) FROM docsrc p
-       |      WHERE p.batch < d.batch) - $TtlSeconds,
-       |      -9223372036854775807) AS wm
-       |  FROM docsrc d),
-       |acc AS (SELECT *,
-       |    md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS f
-       |  FROM wms WHERE ts >= wm)
-       |SELECT a.doc_id, a.text FROM acc a
-       |WHERE NOT EXISTS (
-       |  SELECT 1 FROM acc b WHERE b.f = a.f AND b.batch < a.batch
-       |    AND b.ts + $TtlSeconds >= a.wm)""".stripMargin
-  }
-
-  private def streamingNearDupOracleSql: String =
-    minhashOracleSqlOver(streamingDocsFrom, streamingRules = true)
-
-  /** DuckDB SimHash oracle: same md5-60-bit token-hash spec and per-bit
-    * majority vote as [[Dedup.simhash]].
-    */
-  private def simhashOracleSql: String = {
-    val n = Dedup.SimhashBits
-    val votes = (0 until n).map(b =>
-      s"sum(CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END) AS b$b")
-      .mkString(",\n  ")
-    val assemble = (0 until n).map(b =>
-      s"CASE WHEN b$b > 0 THEN ${1L << b} ELSE 0 END").mkString(" + ")
-    s"""WITH toks AS (SELECT doc_id,
-       |    unnest(regexp_extract_all(lower(text),
-       |      '${graft.functions.Tokens.TokenPatternRe2}')) AS tok
-       |  FROM documents),
-       |hs AS (SELECT doc_id,
-       |    ('0x' || substring(md5(tok), 1, 15))::BIGINT AS h FROM toks),
-       |votes AS (SELECT doc_id, $votes FROM hs GROUP BY doc_id)
-       |SELECT doc_id AS id, ($assemble)::BIGINT AS simhash FROM votes""".stripMargin
-  }
-
-  /** SQL expression for [[SimilaritySearch.lshSignature]] over `vecExpr`:
-    * the plane matrix is embedded as the SAME literals the Spark plan
-    * folds in, and the projection is the same sequential left fold.
-    */
-  private def lshSigSql(vecExpr: String, dim: Int, nPlanes: Int,
-      seed: Int): String =
-    (0 until nPlanes).map { p =>
-      val proj = (0 until dim).map(d =>
-        s"$vecExpr[${d + 1}]::DOUBLE * " +
-          s"${SimilaritySearch.planeSign(seed, p, d)}").mkString("0.0 + ", " + ", "")
-      s"(CASE WHEN ($proj) > 0 THEN ${1L << p} ELSE 0 END)"
-    }.mkString("(", " + ", ")")
-
-  /** DuckDB ANN-LSH oracle: same per-band plane literals, bucket join,
-    * cosine and ranking as `q_ann_lsh` (dim=64, nPlanes=8, bands=4, k=10,
-    * queries vec_id<5).
-    */
-  private def annLshOracleSql: String = {
-    val bands = 4
-    val sigCols = (0 until bands).map(b =>
-      s"${lshSigSql("embedding", dim = 64, nPlanes = 8, seed = b)} AS s$b")
-      .mkString(",\n  ")
-    val bandSel = (0 until bands).map(b =>
-      s"SELECT vec_id, embedding, $b AS band, s$b AS sig FROM sigs")
-      .mkString("\nUNION ALL\n")
-    s"""WITH sigs AS (SELECT vec_id, embedding, $sigCols FROM embeddings),
-       |banded AS ($bandSel),
-       |q AS (SELECT vec_id AS query_id, embedding AS qvec, band, sig
-       |  FROM banded WHERE vec_id < 5),
-       |cand AS (SELECT DISTINCT query_id, banded.vec_id,
-       |    banded.embedding AS vemb, qvec
-       |  FROM banded JOIN q USING (band, sig)
-       |  WHERE banded.vec_id <> query_id),
-       |scored AS (SELECT query_id, vec_id,
-       |    round(list_cosine_similarity(vemb::DOUBLE[],
-       |      qvec::DOUBLE[]), 6) AS cos_sim
-       |  FROM cand),
-       |ranked AS (SELECT *, row_number() OVER
-       |  (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 10""".stripMargin
-  }
-
-  /** DuckDB multi-probe ANN-LSH oracle: the data side hashes every vector
-    * to ONE bucket per band (same plane literals and fold as
-    * `q_ann_lsh`); the query side (vec_id<5) adds, per band, the 2
-    * single-bit-flip signatures with the smallest |projection| margin
-    * (ties on the exact double broken by plane index — the same
-    * (margin, mask) ordering the Spark plan's array_sort uses).
-    */
-  private def annLshMpOracleSql: String = {
-    val bands = 4
-    val nPlanes = 8
-    val dim = 64
-    val probes = 2
-    val projCols = (for (b <- 0 until bands; p <- 0 until nPlanes) yield {
-      val terms = (0 until dim).map(d =>
-        s"embedding[${d + 1}]::DOUBLE * " +
-          s"${SimilaritySearch.planeSign(b, p, d)}")
-        .mkString("0.0 + ", " + ", "")
-      s"($terms) AS pr${b}_$p"
-    }).mkString(",\n  ")
-    val sigCols = (0 until bands).map { b =>
-      (0 until nPlanes).map(p =>
-        s"(CASE WHEN pr${b}_$p > 0 THEN ${1L << p} ELSE 0 END)")
-        .mkString("(", " + ", s") AS s$b")
-    }.mkString(",\n  ")
-    val bandSel = (0 until bands).map(b =>
-      s"SELECT vec_id, embedding, $b AS band, s$b AS sig FROM sigs")
-      .mkString("\nUNION ALL\n")
-    val flipSel = (for (b <- 0 until bands; p <- 0 until nPlanes) yield
-      s"SELECT vec_id, embedding, $b AS band, abs(pr${b}_$p) AS margin, " +
-        s"$p AS p, xor(s$b, ${1L << p}) AS sig FROM sigs WHERE vec_id < 5")
-      .mkString("\nUNION ALL\n")
-    s"""WITH projs AS (SELECT vec_id, embedding, $projCols FROM embeddings),
-       |sigs AS (SELECT *, $sigCols FROM projs),
-       |banded AS ($bandSel),
-       |flips AS (SELECT *, row_number() OVER (PARTITION BY vec_id, band
-       |    ORDER BY margin, p) AS rk FROM ($flipSel)),
-       |q AS (SELECT vec_id AS query_id, embedding AS qvec, band, sig
-       |    FROM banded WHERE vec_id < 5
-       |  UNION ALL
-       |  SELECT vec_id AS query_id, embedding AS qvec, band, sig
-       |    FROM flips WHERE rk <= $probes),
-       |cand AS (SELECT DISTINCT query_id, banded.vec_id,
-       |    banded.embedding AS vemb, qvec
-       |  FROM banded JOIN q USING (band, sig)
-       |  WHERE banded.vec_id <> query_id),
-       |scored AS (SELECT query_id, vec_id,
-       |    round(list_cosine_similarity(vemb::DOUBLE[],
-       |      qvec::DOUBLE[]), 6) AS cos_sim
-       |  FROM cand),
-       |ranked AS (SELECT *, row_number() OVER
-       |  (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 10""".stripMargin
-  }
-
-  /** DuckDB IVF-Flat oracle: same deterministic quantizer (16 lowest-id
-    * vectors), round-6 argmax-cosine list assignment with ties to the
-    * lowest cid, 4 probed lists per query, exact cosine + ranking —
-    * mirrors `SimilaritySearch.ivfTopK` step for step.
-    */
-  private def annIvfOracleSql: String = {
-    val nCentroids = 16
-    val nProbe = 4
-    s"""WITH cent AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS cvec
-       |  FROM embeddings ORDER BY vec_id LIMIT $nCentroids),
-       |assign AS (SELECT e.vec_id, e.embedding AS emb, c.cid,
-       |    round(list_cosine_similarity(e.embedding::DOUBLE[], c.cvec),
-       |      6) AS ccos
-       |  FROM embeddings e CROSS JOIN cent c),
-       |ranked_assign AS (SELECT vec_id, emb, cid, row_number() OVER
-       |    (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS crank
-       |  FROM assign),
-       |lists AS (SELECT vec_id, emb, cid AS list_id
-       |  FROM ranked_assign WHERE crank = 1),
-       |qprobe AS (SELECT vec_id AS query_id, emb AS qemb,
-       |    cid AS list_id
-       |  FROM ranked_assign WHERE vec_id < 5 AND crank <= $nProbe),
-       |scored AS (SELECT q.query_id, l.vec_id,
-       |    round(list_cosine_similarity(l.emb::DOUBLE[],
-       |      q.qemb::DOUBLE[]), 6) AS cos_sim
-       |  FROM lists l JOIN qprobe q ON l.list_id = q.list_id
-       |  WHERE l.vec_id <> q.query_id),
-       |ranked AS (SELECT *, row_number() OVER
-       |  (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, vec_id, cos_sim, rank FROM ranked
-       |WHERE rank <= 10""".stripMargin
-  }
-
-  /** DuckDB banded-embedding-LSH oracle: same per-band plane literals,
-    * bucket join, exact-cosine verify and threshold as
-    * `q_embedding_dedup` (dim=64, nPlanes=6, bands=8, minCosine=0.3).
-    */
-  private def embeddingDedupOracleSql: String = {
-    val bands = 8
-    val sigCols = (0 until bands).map(b =>
-      s"${lshSigSql("embedding", dim = 64, nPlanes = 6, seed = b)} AS s$b")
-      .mkString(",\n  ")
-    val bandSelects = (0 until bands).map(b =>
-      s"SELECT vec_id, embedding, $b AS band, s$b AS sig FROM sigs")
-      .mkString("\nUNION ALL\n")
-    s"""WITH sigs AS (SELECT vec_id, embedding, $sigCols FROM embeddings),
-       |banded AS ($bandSelects),
-       |pairs AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b,
-       |    round(list_cosine_similarity(a.embedding::DOUBLE[],
-       |      b.embedding::DOUBLE[]), 6) AS cos_sim
-       |  FROM banded a JOIN banded b
-       |    ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id)
-       |SELECT id_a, id_b, cos_sim FROM pairs WHERE cos_sim >= 0.3""".stripMargin
-  }
-
-  /** Ground-truth oracle for `q_linkage_clusters`: the generator assigns
-    * file i to entity family i mod F, so a PERFECT clustering has exactly
-    * one cluster per family with cluster_id = min file_id = family index.
-    * This is the strongest check a clustering can get — the driver row
-    * only hash-matches if the pipeline resolves every entity exactly.
-    */
-  private def linkageOracleSql: String = {
-    val nFiles = 1000L
-    val f = graft.pipeline.NameFixtures.families.length
-    val rows = (0 until f).map { fam =>
-      (fam.toLong, (nFiles - fam + f - 1) / f, 1L)
-    }
-    Goldens.valuesSql(Seq("cluster_id", "cluster_size", "n_families"), rows)
-  }
-
-  /** Determinism-pin oracle for `q_multimodal_features`: image rows are
-    * REAL PNGs decoded with the JDK's ImageIO (dimensions + luminance
-    * histogram of actual pixels); audio rows are REAL PCM WAVs decoded
-    * with the JDK's javax.sound.sampled (sample count, RMS, Goertzel
-    * band energies); video rows are REAL MJPEG AVIs decoded via the
-    * RIFF chunk walk + the JDK's JPEG plugin (frame count, dims,
-    * temporal luminance curve). Expected values are recomputed
-    * driver-side from the SAME pure functions
-    * ([[Multimodal.syntheticRow]]/[[Multimodal.decode]]) — pinning that
-    * the distributed mapPartitions path reproduces the scalar path
-    * row-for-row, including a genuine executor-side image decode.
-    */
-  private def multimodalOracleSql: String = {
-    val rows = (0L until 500L).map { i =>
-      val (id, kind, _, _, _, _, payload) = Multimodal.syntheticRow(i, 42L)
-      val sum = Multimodal.decode(kind, payload, 16)
-        .foldLeft(0.0)((acc, x) => acc + x)
-      val rounded = BigDecimal(sum)
-        .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-      (id, kind, rounded)
-    }
-    Goldens.valuesSql(Seq("media_id", "kind", "feature_sum"), rows)
-  }
-
-  /** Merge budget for the BPE driver query (train stops earlier if no
-    * pair repeats).
-    */
-  private val BpeMerges = 200
-
-  /** Determinism-pin oracle for `q_bpe_stats`: expected token counts and
-    * boundary tokens recomputed driver-side from the SAME pure
-    * train/encode functions ([[graft.ops.Bpe]]) over the same corpus
-    * literals — pinning that the distributed path (Spark word-frequency
-    * aggregation + codegen'd `graft_bpe_count`/`graft_bpe_encode`)
-    * reproduces the scalar path row-for-row.
-    */
-  private def bpeStatsOracleSql: String = {
-    import graft.ops.Bpe
-    val wf = Bpe.pureWordFrequencies(Bpe.demoCorpus.map(_._2))
-    val ranks = Bpe.parseMerges(
-      Bpe.mergesAsString(Bpe.train(wf, BpeMerges)))
-    val rows = Bpe.demoCorpus.map { case (id, text) =>
-      val toks = Bpe.encode(text, ranks)
-      (id, toks.length, toks.head, toks.last)
-    }
-    Goldens.valuesSql(
-      Seq("doc_id", "n_bpe_tokens", "first_token", "last_token"), rows)
-  }
-
-  /** The in-memory chain's clusters of `files`. The closure has run when
-    * `clusters` returns, and its result reads only its own labels, so the
-    * tokenize checkpoint (which the tokens stage reads) and the keys
-    * checkpoint (which the edges read; it cuts the tokens from their plan)
-    * are released here instead of piling up in a long-lived session.
-    */
-  private def inMemoryClusters(spark: SparkSession, files: DataFrame,
-      fileCount: Long): DataFrame = {
-    val stages = new LinkagePipeline.Stages(spark, files, InMemory(fileCount))
-    val clusters = stages.clusters
-    Seq(stages.tokens, stages.edges).foreach(graft.pipeline.ConnectedComponents.release)
-    clusters
-  }
+  private def all: Seq[DriverQuery] = families.flatMap(_._2)
 
   /** Flagship: the record-linkage pipeline end-to-end on a synthesized
     * repo-file table (north rule shape); driver smoke-checks rows>0.
     */
   def entry(spark: SparkSession): DataFrame = {
     val files = RepoFiles.generate(spark, nFiles = 500, seed = 42L)
-    inMemoryClusters(spark, files, 500)
+    PipelineQueries.inMemoryClusters(spark, files, 500)
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("cluster_size"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- engine relational ops (DuckDB-oracled) ----
-    "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_price"),
-          count(lit(1)).as("cnt"))
-    }),
-    "q_join_agg" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .join(t(s, dir, "customer"),
-          col("o_custkey") === col("c_custkey"))
-        .groupBy("c_mktsegment")
-        .agg(
-          count(lit(1)).as("order_cnt"),
-          round(sum("o_totalprice"), 1).as("total_price"))
-    }),
-    "q_topk_orders" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-    "q_filter_project" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .where(col("l_quantity") > 45 && col("l_discount") < 0.05)
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-    }),
-    "q_window_events" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(
-          date_trunc("hour", col("ts")).as("hour_ts"),
-          col("event_type"))
-        .agg(
-          count(lit(1)).as("cnt"),
-          round(sum("value"), 2).as("total_value"))
-    }),
-    // ---- text analysis (DuckDB-oracled) ----
-    "q_dedup_exact" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .groupBy(TextAnalysis.fingerprintCol(col("text")).as("fp"))
-        .agg(count(lit(1)).as("cnt"))
-    }),
-    "q_token_stats" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(
-          col("doc_id"),
-          length(col("text")).as("n_chars"),
-          TextAnalysis.tokenCountCol(col("text")).as("n_tokens"))
-    }),
-    "q_subword_stats" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.subwordCountCol(col("text")).as("n_subwords"))
-    }),
-    // corpus-trained BPE: distributed word-freq agg + driver merge loop
-    // (graft.ops.Bpe), encode/count through the codegen'd expressions.
-    // Runs over the deterministic demo corpus so the oracle can re-derive
-    // expected counts from the SAME pure train/encode functions.
-    "q_bpe_stats" -> ((s, _) => {
-      reg(s)
-      import s.implicits._
-      // RDD-backed so the expressions run on executors (a literal
-      // LocalRelation would be folded driver-side and measure nothing)
-      val docs = s.sparkContext.parallelize(graft.ops.Bpe.demoCorpus, 2)
-        .toDF("doc_id", "text")
-      val merges = graft.ops.Bpe.mergesAsString(
-        graft.ops.Bpe.trainFromCorpus(docs, "text", numMerges = BpeMerges))
-      // encode ONCE per row into a column, then pick ends — two
-      // independent graft_bpe_encode instances would each re-tokenize
-      // the document (and CollapseProject keeps the non-cheap alias
-      // materialized, so this stays a single evaluation)
-      docs.select(col("doc_id"),
-        call_function("graft_bpe_count", col("text"), lit(merges))
-          .as("n_bpe_tokens"),
-        call_function("graft_bpe_encode", col("text"), lit(merges))
-          .as("toks"))
-        .select(col("doc_id"), col("n_bpe_tokens"),
-          element_at(col("toks"), 1).as("first_token"),
-          element_at(col("toks"), -1).as("last_token"))
-    }),
-    "q_lang_dist" -> ((s, dir) => {
-      t(s, dir, "documents").groupBy("lang")
-        .agg(count(lit(1)).as("cnt"))
-    }),
-    "q_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.fingerprintCol(col("text")).as("fp"))
-    }),
-    // ---- phonetic encoders: reference golden vectors, VALUES oracles ----
-    "q_soundex" -> ((s, _) => goldenUnary(s, Goldens.soundex, "graft_soundex")),
-    "q_soundex_variants" -> ((s, _) => {
-      reg(s)
-      def part(variant: String, fnCol: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-        tokensDf(s, Goldens.soundexVariants.filter(_._1 == variant).map(_._2))
-          .select(lit(variant).as("variant"), col("token"),
-            fnCol(col("token")).as("code"))
-      part("genealogy", c => call_function("graft_soundex_genealogy", c))
-        .union(part("simplified",
-          c => call_function("graft_soundex_simplified", c)))
-        .union(part("custom", c => call_function("graft_soundex_mapping", c,
-          lit(Goldens.soundexCustomMapping))))
-    }),
-    "q_refined_soundex" -> ((s, _) =>
-      goldenUnary(s, Goldens.refinedSoundex, "graft_refined_soundex")),
-    "q_cologne" -> ((s, _) => goldenUnary(s, Goldens.cologne, "graft_cologne")),
-    "q_caverphone1" -> ((s, _) =>
-      goldenUnary(s, Goldens.caverphone1, "graft_caverphone1")),
-    "q_caverphone2" -> ((s, _) =>
-      goldenUnary(s, Goldens.caverphone2, "graft_caverphone2")),
-    "q_metaphone" -> ((s, _) => {
-      reg(s)
-      def part(variant: String, maxLen: Int) =
-        tokensDf(s, Goldens.metaphone.filter(_._1 == variant).map(_._2))
-          .select(lit(variant).as("variant"), col("token"),
-            call_function("graft_metaphone", col("token"), lit(maxLen))
-              .as("code"))
-      part("len4", 4).union(part("len6", 6)).union(part("unbounded", 0))
-    }),
-    "q_double_metaphone" -> ((s, _) => {
-      reg(s)
-      tokensDf(s, Goldens.doubleMetaphone.map(_._1))
-        .select(col("token"),
-          call_function("graft_double_metaphone_primary", col("token"))
-            .as("code_primary"),
-          call_function("graft_double_metaphone_alternate", col("token"))
-            .as("code_alternate"))
-    }),
-    "q_double_metaphone_equal" -> ((s, _) => {
-      reg(s)
-      def part(alt: Boolean) =
-        pairsDf(s, Goldens.dmEqual.filter(_._3 == alt).map(r => (r._1, r._2)))
-          .select(col("token_a"), col("token_b"), lit(alt).as("alternate"),
-            call_function("graft_double_metaphone_equal",
-              col("token_a"), col("token_b"), lit(alt)).as("dm_equal"))
-      part(false).union(part(true))
-    }),
-    "q_nysiis" -> ((s, _) => {
-      reg(s)
-      def part(variant: String, strict: Boolean) =
-        tokensDf(s, Goldens.nysiis.filter(_._1 == variant).map(_._2))
-          .select(lit(variant).as("variant"), col("token"),
-            call_function("graft_nysiis", col("token"), lit(strict))
-              .as("code"))
-      part("strict", strict = true).union(part("lax", strict = false))
-    }),
-    "q_phonex" -> ((s, _) => goldenUnary(s, Goldens.phonex, "graft_phonex")),
-    "q_mra_encode" -> ((s, _) =>
-      goldenUnary(s, Goldens.mraEncode, "graft_mra_encode")),
-    "q_dm_soundex" -> ((s, _) => {
-      reg(s)
-      tokensDf(s, Goldens.dmSoundex.map(_._1))
-        .select(col("token"),
-          concat_ws("|", call_function("graft_dm_soundex", col("token")))
-            .as("code"))
-    }),
-    "q_dm_encode" -> ((s, _) =>
-      goldenUnary(s, Goldens.dmEncode, "graft_dm_encode")),
-    "q_beider_morse" -> ((s, _) => {
-      reg(s)
-      Goldens.beiderMorse
-        .groupBy { case (nt, rt, cc, mp, _, _) => (nt, rt, cc, mp) }
-        .toSeq.sortBy(_._1.toString)
-        .map { case ((nt, rt, cc, mp), rows) =>
-          tokensDf(s, rows.map(_._5))
-            .select(lit(nt).as("name_type"), lit(rt).as("rule_type"),
-              lit(cc).as("concat_words"), lit(mp).as("max_phonemes"), col("token"),
-              call_function("graft_beider_morse", col("token"),
-                lit(nt), lit(rt), lit(cc), lit(mp)).as("code"))
-        }
-        .reduce(_.union(_))
-    }),
-    "q_bm_lang_restricted" -> ((s, _) => {
-      reg(s)
-      Goldens.bmLangRestricted
-        .groupBy { case (nt, rt, cc, mp, langs, _, _) => (nt, rt, cc, mp, langs) }
-        .toSeq.sortBy(_._1.toString)
-        .map { case ((nt, rt, cc, mp, langs), rows) =>
-          tokensDf(s, rows.map(_._6))
-            .select(lit(nt).as("name_type"), lit(rt).as("rule_type"),
-              lit(cc).as("concat_words"), lit(mp).as("max_phonemes"),
-              lit(langs).as("languages"), col("token"),
-              call_function("graft_bm_encode_langs", col("token"),
-                lit(nt), lit(rt), lit(cc), lit(mp), lit(langs)).as("code"))
-        }
-        .reduce(_.union(_))
-    }),
-    "q_bm_guess_lang" -> ((s, _) => {
-      reg(s)
-      tokensDf(s, Goldens.bmGuessLang.map(_._1))
-        .select(col("token"),
-          call_function("graft_bm_guess_lang", col("token")).as("langs"))
-    }),
-    // ---- comparators: reference golden pairs, VALUES oracles ----
-    "q_mra_match_pairs" -> ((s, _) => {
-      reg(s)
-      pairsDf(s, Goldens.mraPairs.map(r => (r._1, r._2)))
-        .select(col("token_a"), col("token_b"),
-          graftMraMatch(col("token_a"), col("token_b")).as("mra_match"))
-    }),
-    "q_soundex_difference" -> ((s, _) => {
-      reg(s)
-      pairsDf(s, Goldens.soundexDifference.map(r => (r._1, r._2)))
-        .select(col("token_a"), col("token_b"),
-          graftSoundexDifference(col("token_a"), col("token_b")).as("diff"))
-    }),
-    "q_refined_soundex_difference" -> ((s, _) => {
-      reg(s)
-      pairsDf(s, Goldens.refinedSoundexDifference.map(r => (r._1, r._2)))
-        .select(col("token_a"), col("token_b"),
-          call_function("graft_refined_soundex_difference",
-            col("token_a"), col("token_b")).as("diff"))
-    }),
-    "q_jaro_winkler" -> ((s, _) => {
-      reg(s)
-      pairsDf(s, Goldens.jaroWinklerPairs)
-        .select(col("token_a"), col("token_b"),
-          round(graftJaroWinkler(col("token_a"), col("token_b")), 6).as("jw"))
-    }),
-    // ---- dedup / similarity (Spark-only semantics; rows-only) ----
-    "q_minhash_dedup" -> ((s, dir) => {
-      Dedup.minhashCandidates(
-        t(s, dir, "documents"), "doc_id", "text",
-        numHashes = 32, bands = 8)
-        .where(col("est_jaccard") >= 0.5)
-    }),
-    // fuzzy dedup end-to-end: MinHash edges -> connected components ->
-    // one representative per group (longest text, lowest id) — the
-    // training-corpus dedup resolution, not just pair detection
-    "q_neardup_clusters" -> ((s, dir) => {
-      Dedup.nearDupClusters(t(s, dir, "documents"), "doc_id", "text",
-        numHashes = 32, bands = 8, threshold = 0.5)
-    }),
-    "q_simhash" -> ((s, dir) => {
-      Dedup.simhash(t(s, dir, "documents"), "doc_id", "text")
-    }),
-    "q_ngram_jaccard" -> ((s, dir) => {
-      // the id-window (id_b - id_a <= W) is IN the equi-key, not a post-join
-      // filter: ids are bucketed by floor(id / (W+1)) and the left side is
-      // exploded to (bucket, bucket+1), so every qualifying pair matches
-      // exactly one (lang, bucket) key and the join never enumerates the
-      // O(n^2/|langs|) lang-only pairs — key cardinality scales with n.
-      val W = 5
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id"), col("lang"),
-          substring(col("text"), 1, 200).as("snippet"))
-      val bkt = floor(col("doc_id") / (W + 1))
-      val a = docs.select(col("doc_id").as("id_a"), col("lang"),
-        col("snippet").as("text_a"),
-        explode(array(bkt, bkt + 1)).as("bucket"))
-      val b = docs.select(col("doc_id").as("id_b"), col("lang"),
-        col("snippet").as("text_b"), bkt.as("bucket"))
-      a.join(b, Seq("lang", "bucket"))
-        .where(col("id_a") < col("id_b") && (col("id_b") - col("id_a")) <= W)
-        .select(col("id_a"), col("id_b"),
-          Dedup.ngramJaccard(col("text_a"), col("text_b")).as("jaccard"))
-    }),
-    "q_ann_brute" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SimilaritySearch.bruteForceTopK(
-        emb, emb.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-    }),
-    "q_ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      SimilaritySearch.lshTopK(
-        emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        dim = 64, k = 10, nPlanes = 8)
-    }),
-    "q_ann_lsh_mp" -> ((s, dir) => {
-      // multi-probe: same buckets data-side, the broadcast query side
-      // additionally probes the 2 lowest-|margin| bit-flip buckets per
-      // band — recall bought at zero data-side explode growth
-      val emb = t(s, dir, "embeddings")
-      SimilaritySearch.lshTopK(
-        emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        dim = 64, k = 10, nPlanes = 8, bands = 4, probes = 2)
-    }),
-    "q_ann_ivf" -> ((s, dir) => {
-      // IVF-Flat: 16 sampled centroids inlined as plan-time literals
-      // (shuffle-free list assignment), probe the 4 nearest lists —
-      // the partition-pruned scale path; nProbe=nCentroids is exact
-      val emb = t(s, dir, "embeddings")
-      SimilaritySearch.ivfTopK(
-        emb, emb.where(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, nCentroids = 16, nProbe = 4)
-    }),
-    "q_embedding_dedup" -> ((s, dir) => {
-      // testdata embeddings are near-random (max pairwise cosine ~0.48);
-      // 0.3 exercises the banded-LSH + exact-verify path with real output.
-      // 8 bands x 2^6 sigs = 512 effective buckets.
-      Dedup.embeddingNearDups(
-        t(s, dir, "embeddings"), "vec_id", "embedding",
-        dim = 64, nPlanes = 6, bands = 8, minCosine = 0.3)
-    }),
-    "q_langid" -> ((s, dir) => {
-      reg(s)
-      t(s, dir, "documents")
-        .groupBy(TextAnalysis.langIdFastCol(col("text")).as("lang_guess"))
-        .agg(count(lit(1)).as("cnt"))
-    }),
-    "q_langid_scored" -> ((s, dir) => {
-      reg(s)
-      // confidence floor 2: a single stopword hit is noise at corpus scale
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          TextAnalysis.langIdScoredFastCol(col("text"), minHits = 2).as("s"))
-        .select(col("doc_id"), col("s.lang").as("lang_guess"),
-          col("s.hits").as("lang_hits"))
-    }),
-    "q_quality" -> ((s, dir) => {
-      TextAnalysis.qualityFeatures(t(s, dir, "documents"), "text")
-        .select("doc_id", "n_chars", "n_tokens", "punct_ratio",
-          "quality_score")
-    }),
-    "q_multimodal_features" -> ((s, dir) => {
-      Multimodal.extractFeatures(
-        Multimodal.synthesize(s, 500), featureDim = 16)
-        .select(col("media_id"), col("kind"),
-          round(aggregate(col("features"),
-            lit(0.0), (acc, x) => acc + x), 4).as("feature_sum"))
-    }),
-    // ---- streaming ops (deterministic two-micro-batch MemoryStream) ----
-    "q_streaming_dedup" -> ((s, _) =>
-      graft.streaming.StreamingDriverQueries.dedup(s)),
-    "q_streaming_neardup" -> ((s, _) =>
-      graft.streaming.StreamingDriverQueries.nearDup(s)),
-    "q_streaming_linkage" -> ((s, _) =>
-      graft.streaming.StreamingDriverQueries.linkage(s)),
-    // ---- checkpoint/lineage layer (TableIO commit + resume) ----
-    "q_checkpoint_lineage" -> ((s, _) => {
-      import s.implicits._
-      val dirPath = scratchDir("graft_ckpt")
-      try {
-        val dir = dirPath.toString
-        val io1 = new graft.io.TableIO(s, dir)
-        // 4 partitions for a 200-row fixture: the stage commits otherwise
-        // write 32 near-empty parquet files each (generation is per-row
-        // deterministic, so row counts are partition-independent)
-        val files = RepoFiles.generate(s, nFiles = 200, seed = 42L,
-          partitions = 4)
-        val input = io1.stage("input") { files }
-        io1.stage("tokens", upstream = Seq("input")) {
-          Tokenizer.tokenize(input)
-        }
-        // first-run row counts come from the commit manifests (observe()'d
-        // during the write — the lineage metadata exists so downstreams
-        // never re-scan committed data for a cardinality); the CONSISTENCY
-        // check below still re-counts through the fresh TableIO, so the
-        // manifest-vs-recount comparison is part of what the oracle pins
-        val r1 = Seq(
-          "input" -> io1.committedRows("input").getOrElse(-1L),
-          "tokens" -> io1.committedRows("tokens").getOrElse(-1L))
-        // fresh TableIO over the same root: both stages must resume from
-        // the committed snapshots (manifest present, same row counts)
-        val io2 = new graft.io.TableIO(s, dir)
-        val resumed = Seq(
-          ("input", io2.isCommitted("input"), io2.read("input").count()),
-          ("tokens", io2.isCommitted("tokens"), io2.read("tokens").count()))
-        r1.zip(resumed).map { case ((st, n), (_, committed, n2)) =>
-          (st, n, committed && n == n2)
-        }.toDF("stage", "rows", "resume_consistent")
-      } finally {
-        // the committed stages are single-use fixture state; the result
-        // rows above are already local values, so the tree can go now
-        // (repeated bench passes must not pile scratch up, least of all
-        // on tmpfs)
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dirPath).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-    }),
-    // durable-CC kill-and-resume: run the closure loop capped at 1 round
-    // with a snapshot every round (leaves cc_round_1 committed — the
-    // "killed driver" state), then a FRESH TableIO resumes the loop
-    // mid-closure from that snapshot and finishes. The perfect-clustering
-    // oracle only matches if the resumed run converges to exactly the
-    // clusters an uninterrupted run produces.
-    "q_cc_resume" -> ((s, _) => {
-      val dir = scratchDir("graft_cc_resume")
-      // everything this query localCheckpoints except its result: released
-      // on every exit path
-      var checkpoints = Seq.empty[DataFrame]
-      try {
-        val files = RepoFiles.generate(s, nFiles = 1000, seed = 42L,
-          partitions = genParts(s, 1000))
-        val pipelineEdges =
-          new LinkagePipeline.Stages(s, files, InMemory(1000)).edges
-        val edges = pipelineEdges
-          .localCheckpoint() // one edge materialization shared by both runs
-        checkpoints = Seq(pipelineEdges, edges)
-        val io1 = new graft.io.TableIO(s, dir.toString)
-        val (_, iterKilled) = graft.pipeline.ConnectedComponents.runCounted(
-          s, files.select("file_id"), edges, maxIterations = 1,
-          durable = Some((io1, 1)), lineageToken = "edges-fixture-v1")
-        require(iterKilled == 1 && io1.isCommitted("cc_round_1"),
-          "phase 1 must stop mid-closure with a committed snapshot")
-        val io2 = new graft.io.TableIO(s, dir.toString) // fresh driver, same root
-        val labels = graft.pipeline.ConnectedComponents.run(
-          s, files.select("file_id"), edges,
-          durable = Some((io2, 1)), lineageToken = "edges-fixture-v1")
-        checkpoints :+= labels
-        labels
-          .join(files.select("file_id", "entity_id"), "file_id")
-          .groupBy("cluster_id")
-          .agg(count(lit(1)).as("cluster_size"),
-            countDistinct("entity_id").as("n_families"))
-          // eager: materialize the (tiny) cluster table BEFORE the
-          // snapshot root below is deleted out from under the plan
-          .localCheckpoint()
-      } finally {
-        checkpoints.foreach(graft.pipeline.ConnectedComponents.release)
-        // the snapshots are single-use fixture state — delete the tree
-        // so repeated runs (Verify + Bench pass-pairs) don't pile up
-        // temp directories
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      }
-    }),
-    // ---- the linkage pipeline itself (north rule; rows-only) ----
-    "q_linkage_clusters" -> ((s, dir) => {
-      val files = RepoFiles.generate(s, nFiles = 1000, seed = 42L,
-        partitions = genParts(s, 1000))
-      inMemoryClusters(s, files, 1000)
-        .join(files.select("file_id", "entity_id"), "file_id")
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("cluster_size"),
-          countDistinct("entity_id").as("n_families"))
-    })
-  )
-
-  /** DuckDB-equivalent SQL for the hash-compared queries. Phonetic
-    * operators use VALUES-literal tables of the reference's expected
-    * codes (generated from [[graft.goldens.Goldens]], the same data the
-    * queries encode). Omitted only for ops DuckDB cannot express.
+  /** Each query registers the graft SQL functions on the session it is
+    * given first: a driver's session (as in `Verify`) never does.
     */
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_price,
-        |  count(*) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q_join_agg" ->
-      """SELECT c_mktsegment,
-        |  count(*) AS order_cnt,
-        |  round(sum(o_totalprice), 1) AS total_price
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "q_topk_orders" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_quantity > 45 AND l_discount < 0.05""".stripMargin,
-    "q_window_events" ->
-      """SELECT date_trunc('hour', ts) AS hour_ts, event_type,
-        |  count(*) AS cnt, round(sum(value), 2) AS total_value
-        |FROM events GROUP BY 1, 2""".stripMargin,
-    "q_dedup_exact" ->
-      """SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp,
-        |  count(*) AS cnt
-        |FROM documents GROUP BY 1""".stripMargin,
-    "q_token_stats" ->
-      """SELECT doc_id, length(text) AS n_chars,
-        |  len(regexp_split_to_array(text, '\s+')) AS n_tokens
-        |FROM documents""".stripMargin,
-    "q_lang_dist" ->
-      "SELECT lang, count(*) AS cnt FROM documents GROUP BY lang",
-    "q_subword_stats" ->
-      """SELECT doc_id,
-        |  len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]'))
-        |    AS n_subwords
-        |FROM documents""".stripMargin,
-    "q_bpe_stats" -> bpeStatsOracleSql,
-    "q_fingerprint" ->
-      """SELECT doc_id,
-        |  md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-        |FROM documents""".stripMargin,
-    // ---- golden-vector oracles (reference-expected codes as VALUES) ----
-    "q_soundex" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.soundex),
-    "q_soundex_variants" ->
-      Goldens.valuesSql(Seq("variant", "token", "code"),
-        Goldens.soundexVariants),
-    "q_refined_soundex" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.refinedSoundex),
-    "q_cologne" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.cologne),
-    "q_caverphone1" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.caverphone1),
-    "q_caverphone2" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.caverphone2),
-    "q_metaphone" ->
-      Goldens.valuesSql(Seq("variant", "token", "code"), Goldens.metaphone),
-    "q_double_metaphone" ->
-      Goldens.valuesSql(Seq("token", "code_primary", "code_alternate"),
-        Goldens.doubleMetaphone),
-    "q_double_metaphone_equal" ->
-      Goldens.valuesSql(Seq("token_a", "token_b", "alternate", "dm_equal"),
-        Goldens.dmEqual.filter(!_._3) ++ Goldens.dmEqual.filter(_._3)),
-    "q_nysiis" ->
-      Goldens.valuesSql(Seq("variant", "token", "code"), Goldens.nysiis),
-    "q_phonex" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.phonex),
-    "q_mra_encode" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.mraEncode),
-    "q_dm_soundex" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.dmSoundex),
-    "q_dm_encode" ->
-      Goldens.valuesSql(Seq("token", "code"), Goldens.dmEncode),
-    "q_beider_morse" ->
-      Goldens.valuesSql(
-        Seq("name_type", "rule_type", "concat_words", "max_phonemes", "token",
-          "code"),
-        Goldens.beiderMorse),
-    "q_bm_lang_restricted" ->
-      Goldens.valuesSql(
-        Seq("name_type", "rule_type", "concat_words", "max_phonemes", "languages",
-          "token", "code"),
-        Goldens.bmLangRestricted),
-    "q_bm_guess_lang" ->
-      Goldens.valuesSql(Seq("token", "langs"), Goldens.bmGuessLang),
-    "q_mra_match_pairs" ->
-      Goldens.valuesSql(Seq("token_a", "token_b", "mra_match"),
-        Goldens.mraPairs),
-    "q_soundex_difference" ->
-      Goldens.valuesSql(Seq("token_a", "token_b", "diff"),
-        Goldens.soundexDifference),
-    "q_refined_soundex_difference" ->
-      Goldens.valuesSql(Seq("token_a", "token_b", "diff"),
-        Goldens.refinedSoundexDifference),
-    // ---- training-data ops recomputed independently by DuckDB ----
-    "q_ngram_jaccard" ->
-      """WITH g AS (
-        |  SELECT doc_id, lang,
-        |    list_distinct(list_transform(
-        |      range(1, greatest(length(text[1:200])-1, 2)),
-        |      i -> text[1:200][i:i+2])) AS grams
-        |  FROM documents)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  round(CASE
-        |    WHEN len(list_distinct(list_concat(a.grams, b.grams))) = 0
-        |      THEN 0.0
-        |    ELSE len(list_intersect(a.grams, b.grams))::DOUBLE
-        |         / len(list_distinct(list_concat(a.grams, b.grams)))
-        |    END, 6) AS jaccard
-        |FROM g a JOIN g b ON a.lang = b.lang
-        |  AND a.doc_id < b.doc_id AND b.doc_id - a.doc_id <= 5""".stripMargin,
-    "q_ann_brute" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qvec
-        |  FROM embeddings WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT query_id, vec_id,
-        |    round(list_cosine_similarity(embedding::DOUBLE[], qvec), 6)
-        |      AS cos_sim
-        |  FROM embeddings CROSS JOIN q WHERE vec_id <> query_id),
-        |ranked AS (SELECT *, row_number() OVER
-        |  (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id) AS rank
-        |  FROM scored)
-        |SELECT query_id, vec_id, cos_sim, rank FROM ranked
-        |WHERE rank <= 10""".stripMargin,
-    "q_quality" ->
-      """WITH f AS (SELECT doc_id,
-        |  length(text)::DOUBLE AS n_chars,
-        |  len(regexp_split_to_array(text, '\s+'))::DOUBLE AS n_tokens,
-        |  round(length(regexp_replace(text, '[^!?.,;:]', '', 'g'))::DOUBLE
-        |    / greatest(length(text)::DOUBLE, 1.0), 6) AS punct_ratio,
-        |  round(length(regexp_replace(text, '[^A-Z]', '', 'g'))::DOUBLE
-        |    / greatest(length(text)::DOUBLE, 1.0), 6) AS upper_ratio
-        |  FROM documents)
-        |SELECT doc_id, n_chars, n_tokens, punct_ratio,
-        |  round(CASE WHEN n_chars < 10 THEN 0.0
-        |    ELSE 1.0 - least(1.0, punct_ratio * 5) * 0.3
-        |             - least(1.0, upper_ratio * 3) * 0.2 END, 6)
-        |    AS quality_score
-        |FROM f""".stripMargin,
-    "q_langid" -> langIdOracleSql,
-    "q_langid_scored" -> langIdScoredOracleSql(minHits = 2),
-    "q_minhash_dedup" -> minhashOracleSql,
-    "q_neardup_clusters" -> nearDupClustersOracleSql,
-    "q_simhash" -> simhashOracleSql,
-    "q_ann_lsh" -> annLshOracleSql,
-    "q_ann_lsh_mp" -> annLshMpOracleSql,
-    "q_ann_ivf" -> annIvfOracleSql,
-    "q_embedding_dedup" -> embeddingDedupOracleSql,
-    "q_linkage_clusters" -> linkageOracleSql,
-    // same perfect-clustering ground truth: a resumed closure must land on
-    // byte-identical clusters
-    "q_cc_resume" -> linkageOracleSql,
-    // deterministic stage row counts of the 200-file seed-42 generator;
-    // resume_consistent asserts the second TableIO saw committed
-    // manifests with identical counts
-    "q_checkpoint_lineage" ->
-      Goldens.valuesSql(Seq("stage", "rows", "resume_consistent"),
-        Seq(("input", 200, true), ("tokens", 449, true))),
-    "q_multimodal_features" -> multimodalOracleSql,
-    "q_streaming_dedup" -> streamingDedupOracleSql,
-    "q_streaming_neardup" -> streamingNearDupOracleSql,
-    // STATIC expected edges, derived from reference semantics (not from
-    // this library's own functions, which would be circular): smith/smyth
-    // co-block and cluster-match because commons-codec Metaphone encodes
-    // both to "SM0" (golden-pinned in q_metaphone's vectors) and smyth
-    // arrives in-window (t=1050, TTL 100); jones and wilson match
-    // nothing; smythe (t=2050) WOULD match but the smith/smyth block is
-    // TTL-expired by the watermark-advancing t=2000 event — no edge; and
-    // smithe (t=1500 in batch 4) is LATE below the 2050 watermark — no
-    // edge, no state. StreamingLinkageSpec asserts the library's own
-    // scalar recompute (expectedLinkageEdges) agrees with this list, so
-    // fixture/oracle drift fails the build before it fails the driver.
-    "q_streaming_linkage" ->
-      Goldens.valuesSql(Seq("src", "dst"), Seq((100L, 300L))),
-    // JW oracle recomputes with DuckDB's own jaro_winkler_similarity —
-    // engine-independent agreement on the standard definition
-    "q_jaro_winkler" ->
-      ("SELECT token_a, token_b, " +
-        "round(jaro_winkler_similarity(token_a, token_b), 6) AS jw FROM " +
-        Goldens.valuesTable(Seq("token_a", "token_b"),
-          Goldens.jaroWinklerPairs))
-  )
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map { q =>
+      q.name -> { (s: SparkSession, dir: String) =>
+        GraftFunctions.register(s)
+        q.run(s, dir)
+      }
+    }.toMap
+
+  /** DuckDB-equivalent SQL for the hash-compared queries. */
+  def oracleSql: Map[String, String] = all.map(q => q.name -> q.oracleSql).toMap
 }

@@ -1,7 +1,8 @@
 package graft.goldens
 
-/** Reference golden vectors as data, shared by the driver queries
-  * (`SparkEntry.queries`) and their DuckDB oracles (`SparkEntry.oracleSql`).
+/** Reference golden vectors as data, shared by the golden-vector driver
+  * queries and their DuckDB oracles, which [[graft.driver.GoldenQueries]]
+  * defines side by side.
   *
   * Every list is ported verbatim from the reference's unit-test fixtures
   * (themselves the Apache commons-codec 1.15 vector suites) — each val

@@ -49,9 +49,9 @@ final class LinkagePipeline(spark: SparkSession, io: TableIO) {
   * Callers by policy:
   *   - [[Durable]]: `LinkagePipeline.run` (and through it perfbench's
   *     `linkage` workload).
-  *   - [[InMemory]]: the driver queries `SparkEntry.entry`,
-  *     `q_linkage_clusters` and `q_cc_resume`, `ScalingBench`'s pipeline
-  *     leg and `tools.ClusterAudit`.
+  *   - [[InMemory]]: `SparkEntry.entry` and the driver queries
+  *     `q_linkage_clusters` and `q_cc_resume` (`driver.PipelineQueries`),
+  *     `ScalingBench`'s pipeline leg and `tools.ClusterAudit`.
   */
 object LinkagePipeline {
 

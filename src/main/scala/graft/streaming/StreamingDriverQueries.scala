@@ -2,6 +2,11 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
+
+import graft.driver.{DedupQueries, DriverQuery}
+import graft.goldens.Goldens
 
 /** Deterministic multi-micro-batch MemoryStream runs of the streaming ops,
   * shaped as driver contract queries (`SparkEntry.queries` entries) so the
@@ -81,6 +86,44 @@ object StreamingDriverQueries {
   val docBatches: Seq[Seq[(Long, String, Long)]] =
     Seq(docsBatch1, docsBatch2, docsBatch3)
 
+  /** The fixture docs with their micro-batch index and event time, as a
+    * VALUES relation for the dedup and near-dup oracles.
+    */
+  private def docsFrom: String = {
+    val values = docBatches.zipWithIndex.flatMap { case (b, i) =>
+      b.map { case (id, t, ts) =>
+        s"($id, ${i + 1}, $ts, ${Goldens.sqlStr(t)})"
+      }
+    }.mkString(", ")
+    s"(VALUES $values) AS docsrc(doc_id, batch, ts, text)"
+  }
+
+  /** DuckDB recompute of streaming exact dedup under full event-time
+    * semantics: per-row watermark = max prior-batch event time minus the
+    * TTL delay; LATE rows (ts below watermark) are dropped outright; a
+    * non-late row survives iff no same-fingerprint row arrived in an
+    * earlier batch whose dedup state is still live (its newest arrival's
+    * event time + TTL has not been passed by the watermark — arrivals
+    * extend expiry, so the in-window duplicate doc 4 extends doc 1's
+    * state, and the post-TTL revisit doc 7 passes through). Fingerprint =
+    * the same md5(whitespace-collapsed lowercase) column as batch
+    * `q_fingerprint`.
+    */
+  private def dedupOracleSql: String =
+    s"""WITH docsrc AS (SELECT * FROM $docsFrom),
+       |wms AS (SELECT d.*,
+       |    coalesce((SELECT max(p.ts) FROM docsrc p
+       |      WHERE p.batch < d.batch) - $TtlSeconds,
+       |      -9223372036854775807) AS wm
+       |  FROM docsrc d),
+       |acc AS (SELECT *,
+       |    md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS f
+       |  FROM wms WHERE ts >= wm)
+       |SELECT a.doc_id, a.text FROM acc a
+       |WHERE NOT EXISTS (
+       |  SELECT 1 FROM acc b WHERE b.f = a.f AND b.batch < a.batch
+       |    AND b.ts + $TtlSeconds >= a.wm)""".stripMargin
+
   /** Batch-1 token events (t=1000). */
   val tokensBatch1: Seq[(Long, String, Long)] = Seq(
     (100L, "smith", 1000L), (200L, "jones", 1000L))
@@ -108,89 +151,98 @@ object StreamingDriverQueries {
 
   private val nameCounter = new java.util.concurrent.atomic.AtomicInteger()
 
+  /** The fixtures' own session, one per SparkContext: every session that
+    * runs a streaming query adds a listener bus to the context for good,
+    * so a session per call would grow it with each call. Its SQL conf is
+    * its own, so the fixture's settings never reach other queries on the
+    * caller's session.
+    */
+  private var fixtureSession: Option[SparkSession] = None
+
+  private def sessionFor(spark: SparkSession): SparkSession =
+    fixtureSession.filter(_.sparkContext eq spark.sparkContext).getOrElse {
+      val session = spark.newSession()
+      // a few-row fixture does not need 32 state-store partitions — every
+      // stateful-op partition costs a task + a store commit PER MICRO-BATCH,
+      // which at the session default dominated the query's wall time ~8x.
+      // (Real deployments size this to their ingest rate; the semantics
+      // under test are partition-count independent.)
+      session.conf.set("spark.sql.shuffle.partitions", "1")
+      // NOTE: no-data micro-batches must stay ON — they are where the
+      // engine lands the watermark advance, so removing them runs the next
+      // DATA batch against a stale watermark (measured on this fixture:
+      // the post-TTL revisit doc is wrongly deduped and the late row
+      // wrongly emitted). Half the micro-batches are therefore inherent
+      // fixed cost of the event-time semantics under test.
+      // Checkpoint-file checksums (corruption detection for long-lived
+      // durable checkpoints) double the WAL file writes per micro-batch;
+      // this checkpoint is single-use scratch that is deleted on return,
+      // so they buy nothing here.
+      session.conf
+        .set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      graft.functions.GraftFunctions.register(session)
+      fixtureSession = Some(session)
+      session
+    }
+
   /** Drive `build`'s streaming output through a memory sink for the given
     * micro-batches and return the sink rows as a local DataFrame on
     * `spark` (the results are tiny by construction). The sink table is
     * dropped before returning so repeat invocations (bench warm + timed
     * runs) never collide.
     *
-    * The query runs in a session of its own (`spark.newSession()`: the
-    * same SparkContext, its own SQL conf), so the fixture's settings never
-    * reach other queries on `spark`, and `spark`'s streaming listeners are
-    * added to it so they still see its micro-batches.
+    * The query runs in the fixture session. `spark`'s streaming listeners
+    * are added to it for the call, so they see its micro-batches, and are
+    * removed once they have seen its last event; runs are serialized so
+    * that each listener is added once.
     */
   private def runBatches(
       spark: SparkSession,
       idCol: String,
       strCol: String,
       batches: Seq[Seq[(Long, String, Long)]])(
-      build: DataFrame => DataFrame): DataFrame = {
-    val session = spark.newSession()
-    // a few-row fixture does not need 32 state-store partitions — every
-    // stateful-op partition costs a task + a store commit PER MICRO-BATCH,
-    // which at the session default dominated the query's wall time ~8x.
-    // (Real deployments size this to their ingest rate; the semantics
-    // under test are partition-count independent.)
-    session.conf.set("spark.sql.shuffle.partitions", "1")
-    // NOTE: no-data micro-batches must stay ON — they are where the
-    // engine lands the watermark advance, so removing them runs the next
-    // DATA batch against a stale watermark (measured on this fixture:
-    // the post-TTL revisit doc is wrongly deduped and the late row
-    // wrongly emitted). Half the micro-batches are therefore inherent
-    // fixed cost of the event-time semantics under test.
-    // Checkpoint-file checksums (corruption detection for long-lived
-    // durable checkpoints) double the WAL file writes per micro-batch;
-    // this checkpoint is single-use scratch that is deleted on return,
-    // so they buy nothing here.
-    session.conf
-      .set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-    graft.functions.GraftFunctions.register(session)
-    spark.streams.listListeners().foreach(session.streams.addListener)
-    import session.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
-    val input = MemoryStream[(Long, String, Long)]
-    val name = s"graft_stream_q_${nameCounter.incrementAndGet()}"
-    val out = build(input.toDS().toDF(idCol, strCol, "event_sec"))
+      build: DataFrame => DataFrame): DataFrame =
     // ephemeral checkpoint on tmpfs: the offset/commit WALs and the state
     // store's per-batch delta files are scratch for this in-memory
-    // fixture (a real deployment points this at durable storage), and
-    // the default java.io.tmpdir here is spinning-disk-backed — every
-    // micro-batch paid several file creates + syncs on the query's
-    // critical path
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val ckpt =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        Some(java.nio.file.Files.createTempDirectory(shm, "graft_ckpt_"))
-      else None
-    try {
-      var writer = out.writeStream
-        .format("memory").queryName(name).outputMode("append")
-      ckpt.foreach(p => writer = writer
-        .option("checkpointLocation", p.toString))
-      val query = writer.start()
-      try {
-        batches.foreach { b =>
-          input.addData(b: _*)
-          query.processAllAvailable()
+    // fixture (a real deployment points this at durable storage)
+    DriverQuery.withScratchDir("graft_ckpt_") { ckpt =>
+      synchronized {
+        val session = sessionFor(spark)
+        // events reach listeners asynchronously, in order: once this one,
+        // added last, has the run's termination, the caller's have it too
+        val drained = new java.util.concurrent.CountDownLatch(1)
+        val listeners = spark.streams.listListeners().toSeq :+ new StreamingQueryListener {
+          def onQueryStarted(e: QueryStartedEvent): Unit = ()
+          def onQueryProgress(e: QueryProgressEvent): Unit = ()
+          def onQueryTerminated(e: QueryTerminatedEvent): Unit = drained.countDown()
         }
-        val table = session.table(name)
-        val rows: Seq[Row] = table.collect().toSeq
-        spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), table.schema)
-      } finally {
-        query.stop()
-        session.catalog.dropTempView(name)
-      }
-    } finally {
-      ckpt.foreach { p =>
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .sortBy(-_.getNameCount)
-          .foreach(q => java.nio.file.Files.deleteIfExists(q))
+        listeners.foreach(session.streams.addListener)
+        try {
+          import session.implicits._
+          implicit val sqlCtx: org.apache.spark.sql.SQLContext = session.sqlContext
+          val input = MemoryStream[(Long, String, Long)]
+          val name = s"graft_stream_q_${nameCounter.incrementAndGet()}"
+          val query = build(input.toDS().toDF(idCol, strCol, "event_sec"))
+            .writeStream.format("memory").queryName(name).outputMode("append")
+            .option("checkpointLocation", ckpt.toString)
+            .start()
+          try {
+            batches.foreach { b =>
+              input.addData(b: _*)
+              query.processAllAvailable()
+            }
+            val table = session.table(name)
+            val rows: Seq[Row] = table.collect().toSeq
+            spark.createDataFrame(
+              spark.sparkContext.parallelize(rows, 1), table.schema)
+          } finally {
+            query.stop()
+            session.catalog.dropTempView(name)
+            drained.await(10, java.util.concurrent.TimeUnit.SECONDS)
+          }
+        } finally listeners.foreach(session.streams.removeListener)
       }
     }
-  }
 
   /** Streaming exact dedup over the three batches: survivors =
     * first-arrival per fingerprint while that fingerprint's state is
@@ -211,6 +263,8 @@ object StreamingDriverQueries {
     val links = runBatches(
       spark, "doc_id", "text", docBatches)(
       StreamingDedup.nearDupCandidates(_,
+        numHashes = DedupQueries.NumHashes, bands = DedupQueries.Bands,
+        minJaccard = DedupQueries.MinJaccard,
         stateTtl = java.time.Duration.ofSeconds(TtlSeconds),
         eventTimeCol = Some("event_sec")).toDF())
     links.groupBy("id_a", "id_b")
@@ -230,6 +284,26 @@ object StreamingDriverQueries {
         eventTimeCol = Some("event_sec")).toDF())
     edges.select("src", "dst").dropDuplicates("src", "dst")
   }
+
+  /** The streaming driver queries, with the DuckDB oracles of their runs. */
+  val queries: Seq[DriverQuery] = Seq(
+    DriverQuery("q_streaming_dedup", dedupOracleSql)((s, _) => dedup(s)),
+    DriverQuery("q_streaming_neardup",
+      DedupQueries.minhashPairsOracleSql(docsFrom, Some(TtlSeconds)))(
+      (s, _) => nearDup(s)),
+    // STATIC expected edges, derived from reference semantics (not from
+    // this library's own functions, which would be circular): smith/smyth
+    // co-block and cluster-match because commons-codec Metaphone encodes
+    // both to "SM0" (golden-pinned in q_metaphone's vectors) and smyth
+    // arrives in-window (t=1050, TTL 100); jones and wilson match
+    // nothing; smythe (t=2050) WOULD match but the smith/smyth block is
+    // TTL-expired by the watermark-advancing t=2000 event — no edge; and
+    // smithe (t=1500 in batch 4) is LATE below the 2050 watermark — no
+    // edge, no state. StreamingLinkageSpec asserts the library's own
+    // scalar recompute (expectedLinkageEdges) agrees with this list, so
+    // fixture/oracle drift fails the build before it fails the driver.
+    DriverQuery("q_streaming_linkage",
+      Goldens.valuesSql(Seq("src", "dst"), Seq((100L, 300L))))((s, _) => linkage(s)))
 
   /** Per-batch watermark of a batch sequence under delay 0: max event
     * time of all PRIOR batches (Long.MinValue before any data).

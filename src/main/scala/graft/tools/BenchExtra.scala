@@ -46,8 +46,8 @@ object BenchExtra {
     spark.sparkContext.addSparkListener(counter)
 
     // same untimed warmup as Bench
-    queries("q1_agg")(spark, sfDir).count()
-    queries("q_join_agg")(spark, sfDir).count()
+    Seq(graft.driver.TpchQueries.q1Agg, graft.driver.TpchQueries.joinAgg)
+      .foreach(q => queries(q.name)(spark, sfDir).count())
 
     selected.foreach { case (name, fn) =>
       planDir.foreach { d =>
