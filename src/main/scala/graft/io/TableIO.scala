@@ -8,7 +8,7 @@ import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{DeserializationFeature, PropertyNamingStrategies}
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -80,7 +80,15 @@ object Manifest {
   * Cluster-real I/O: all paths go through the Hadoop [[FileSystem]] API,
   * so the same code runs on HDFS (atomic dir rename), S3A (copy-rename),
   * or local disk — not java.nio, which only exists on the driver's local
-  * filesystem. Metrics are collected DURING the write via `observe()`
+  * filesystem. A `file:` root goes through [[InProcessLocalFs]], both for
+  * TableIO's own listing, renames and manifests and, as writer options,
+  * for the stage writes' tasks and output committer: Hadoop's default
+  * local filesystem, without its native library, runs a `chmod` process
+  * for every file and directory it creates (hundreds per pipeline run).
+  * Its keys also disable the `file:` entry of Hadoop's `FileSystem` cache,
+  * which is keyed by scheme alone and would otherwise hand back whichever
+  * local filesystem the JVM made first. The caller's session conf is not
+  * changed. Metrics are collected DURING the write via `observe()`
   * (row count in one pass, no second scan) plus parquet file sizes from
   * directory metadata; nothing re-reads committed data.
   *
@@ -91,8 +99,11 @@ object Manifest {
 final class TableIO(spark: SparkSession, root: String) {
 
   private val rootPath = new Path(root)
-  private val fs: FileSystem =
-    rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val fs: FileSystem = {
+    val conf = spark.sessionState.newHadoopConf()
+    InProcessLocalFs.HadoopConf.foreach { case (k, v) => conf.set(k, v) }
+    rootPath.getFileSystem(conf)
+  }
   fs.mkdirs(rootPath)
 
   private def stageDir(stage: String): Path = new Path(rootPath, stage)
@@ -149,7 +160,7 @@ final class TableIO(spark: SparkSession, root: String) {
     // lineage counters collected DURING the write — one pass, no re-read
     val obs = Observation(s"graft_${stage}_${System.nanoTime()}")
     val observed = df.observe(obs, count(lit(1)).as("rows"))
-    var writer = observed.write.mode("overwrite")
+    var writer = observed.write.mode("overwrite").options(InProcessLocalFs.HadoopConf)
     if (partitionBy.nonEmpty)
       writer = writer.partitionBy(partitionBy: _*)
     writer.parquet(tmp.toString)
@@ -200,15 +211,16 @@ final class TableIO(spark: SparkSession, root: String) {
     read(stage, Some(m))
   }
 
-  private def listParquetFiles(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val it = fs.listFiles(dir, true)
-    val buf = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith(".parquet")) buf += f
+  /** `listStatus`, not `listFiles`: the latter's `LocatedFileStatus`
+    * reads every file's permissions, which Hadoop's local filesystem does
+    * by running `ls -ld` per file.
+    */
+  private def listParquetFiles(dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.flatMap { f =>
+      if (f.isDirectory) listParquetFiles(f.getPath)
+      else if (f.getPath.getName.endsWith(".parquet")) Seq(f)
+      else Nil
     }
-    buf.result()
-  }
 
   /** Drop a stage (and force recompute on next run). */
   def invalidate(stage: String): Unit = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 import graft.driver.{DedupQueries, DriverQuery}
 import graft.goldens.Goldens
+import graft.io.InProcessLocalFs
 
 /** Deterministic multi-micro-batch MemoryStream runs of the streaming ops,
   * shaped as driver contract queries (`SparkEntry.queries` entries) so the
@@ -180,6 +181,17 @@ object StreamingDriverQueries {
       // so they buy nothing here.
       session.conf
         .set("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      // The offset and commit logs and the state store write a few files
+      // per micro-batch. Through Hadoop's default local filesystem each
+      // file costs a `chmod` process, and the default FileContext-based
+      // checkpoint manager (whose filesystem layer ignores `fs.file.impl`)
+      // a `readlink` process per rename: about half of each micro-batch's
+      // wall time. The FileSystem-based manager over InProcessLocalFs
+      // writes and renames the same files in-process.
+      InProcessLocalFs.HadoopConf.foreach { case (k, v) => session.conf.set(k, v) }
+      session.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager")
       graft.functions.GraftFunctions.register(session)
       fixtureSession = Some(session)
       session

@@ -1,5 +1,7 @@
 package graft.io
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkSessionTestWrapper, TempDirs}
@@ -77,6 +79,34 @@ class TableIOSpec extends AnyFunSuite with TempDirs {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(lang"), plan)
     assert(io.read("by_lang").where($"lang" === "scala").count() == 2)
+  }
+
+  test("manifest files and bytes count exactly the parquet files on disk") {
+    import spark.implicits._
+    val data = (1 to 300).map(i => (i.toLong, s"l${i % 3}")).toDF("id", "lang")
+      .repartition(3)
+    Seq(Nil, Seq("lang")).foreach { partitionBy =>
+      val root = tempDir("graft-tableio")
+      val io = new TableIO(spark, root)
+      io.stage("s", partitionBy = partitionBy)(data)
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "s"))
+      val all = try walk.iterator().asScala.toSeq.filter(java.nio.file.Files.isRegularFile(_))
+        finally walk.close()
+      val names = all.map(_.getFileName.toString)
+      assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".parquet.crc")),
+        s"$partitionBy: $names")
+      val parquet = all.filter(_.getFileName.toString.endsWith(".parquet"))
+      if (partitionBy.nonEmpty)
+        assert(parquet.forall(_.getParent.getFileName.toString.startsWith("lang=")),
+          parquet)
+      val sizes = parquet.map(java.nio.file.Files.size).sorted
+      val m = io.manifest("s").get
+      assert(sizes.size > 1, s"$partitionBy: $sizes")
+      assert(m.files == sizes.size, s"$partitionBy: $m")
+      assert(m.bytes == sizes.sum, s"$partitionBy: $m")
+      assert(m.fileBytes == Manifest.FileBytes(sizes.head, sizes.sum / sizes.size,
+        sizes.last), s"$partitionBy: $m")
+    }
   }
 
   test("a stage whose upstream recomputed after it is not resumed") {
