@@ -126,11 +126,12 @@ object PipelineQueries {
         var checkpoints = Seq.empty[DataFrame]
         try {
           val files = linkageFiles(s)
-          val pipelineEdges =
-            new LinkagePipeline.Stages(s, files, InMemory(LinkageFiles)).edges
-          val edges = pipelineEdges
+          val stages = new LinkagePipeline.Stages(s, files, InMemory(LinkageFiles))
+          val edges = stages.edges
             .localCheckpoint() // one edge materialization shared by both runs
-          checkpoints = Seq(pipelineEdges, edges)
+          // the tokens stage reads the tokenize checkpoint, which the edges'
+          // plan no longer does
+          checkpoints = Seq(stages.tokens, stages.edges, edges)
           val io1 = new TableIO(s, dir.toString)
           val (_, iterKilled) = ConnectedComponents.runCounted(
             s, files.select("file_id"), edges, maxIterations = 1,
